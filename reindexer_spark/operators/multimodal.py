@@ -10,6 +10,8 @@ image/audio decode is stubbed behind ``reindexer_spark.multimodal``
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,6 +23,100 @@ from reindexer_spark.operators.banding import (
     bstat_sql,
 )
 from reindexer_spark.registry import query
+
+# --- fixture-lane scaffold ---------------------------------------------
+#
+# Most media lanes share one shape: the first n documents, one per task,
+# each turned into a digest-seeded fixture whose encode → decode/probe
+# facts become ONE output row; the oracle re-derives the same facts
+# from DuckDB's sha256(text).  The pieces below are that shape's single
+# copy on both engines — a lane keeps only its row function, schema,
+# oracle SQL and docstring.
+
+
+def _ddl_columns(schema: str) -> list[str]:
+    """Column names of a DDL schema string, in order (commas inside
+    ``<...>`` type parameters do not split)."""
+    return [c.split()[0] for c in re.split(r",(?![^<]*>)", schema)]
+
+
+def _fixture_lane(spark: SparkSession, sf_dir: str, n_docs: int, schema: str, row):
+    """documents with ``doc_id < n_docs``, repartitioned one fixture per
+    task, mapped through ``row(media_id, text) -> dict`` in one
+    Arrow-batched mapInPandas pass whose frames take their column order
+    from ``schema``.  Payloads stay task-local; only the ``n_docs``
+    (doc_id, text) rows cross the single Exchange."""
+    cols = _ddl_columns(schema)
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                row(int(mid), text) for mid, text in zip(pdf["doc_id"], pdf["text"])
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    run.__name__ = row.__name__  # plans and the UI name the lane's row fn
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < n_docs)
+    return docs.select("doc_id", "text").repartition(n_docs).mapInPandas(run, schema)
+
+
+def _hex_chain(dg: str, n: int, tag: str = "") -> bytes:
+    """``n`` fixture bytes from the chain sha256(f"{dg}-{tag}{i}"),
+    i = 0, 1, … — the pixel source an oracle rebuilds with
+    ``string_agg(sha256(dg || '-' || i), '' ORDER BY i)``."""
+    import hashlib
+
+    return bytes.fromhex(
+        "".join(
+            hashlib.sha256(f"{dg}-{tag}{i}".encode()).hexdigest()
+            for i in range((n + 31) // 32)
+        )[: 2 * n]
+    )
+
+
+def _patch_ifd_tag(payload: bytes, tag: int, value: int, count: bool = False) -> bytes:
+    """A TIFF fixture with one first-IFD entry rewritten: its SHORT
+    value (or, with ``count``, its LONG count) set to ``value`` — how
+    the TIFF lanes build the malformed twin each must quarantine."""
+    import struct as st
+
+    from reindexer_spark.codecs import MediaFormatError
+
+    f = "<" if payload[:2] == b"II" else ">"
+    buf = bytearray(payload)
+    (ifd,) = st.unpack_from(f + "I", buf, 4)
+    (n,) = st.unpack_from(f + "H", buf, ifd)
+    for i in range(n):
+        e = ifd + 2 + 12 * i
+        if st.unpack_from(f + "H", buf, e)[0] == tag:
+            if count:
+                st.pack_into(f + "I", buf, e + 4, value)
+            else:
+                st.pack_into(f + "H", buf, e + 8, value)
+            return bytes(buf)
+    raise MediaFormatError(f"fixture lacks TIFF tag {tag}")
+
+
+def _base_sql(n_docs: int) -> str:
+    """The oracle twin of _fixture_lane's input: a ``base`` CTE of
+    (media_id, dg = hex sha256(text)) for ``doc_id < n_docs``."""
+    return f"""base AS (
+      SELECT doc_id AS media_id, sha256(text) AS dg
+      FROM documents WHERE doc_id < {n_docs}
+    )"""
+
+
+def _dg_byte(k: int) -> str:
+    """Byte ``k`` of the hex digest ``dg`` as an INT — the SQL twin of
+    Python's ``hashlib.sha256(...).digest()[k]``."""
+    return f"CAST(('0x' || substr(dg, {2 * k + 1}, 2)) AS INT)"
+
+
+def _flags_sql(*names: str) -> str:
+    """Constant-1 INT columns: the contract flags every row must hold."""
+    return ",\n      ".join(f"CAST(1 AS INT) AS {n}" for n in names)
 
 
 @query(
@@ -345,20 +441,17 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sha256(text) byte extraction + the _synth_media kind rotation,
-# re-derived arithmetically — the shared head of the three signature
-# oracles (the recipe proven by crawl_media_harvest_sig).
-_MEDIA_SIG_SQL = """
-    base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents
-      WHERE doc_id < 100
-    ),
+def _media_sig_sql(n_docs: int) -> str:
+    """sha256(text) byte extraction + the _synth_media kind rotation,
+    re-derived arithmetically — the shared head of the four signature
+    oracles (the recipe proven by crawl_media_harvest_sig)."""
+    return f"""
+    {_base_sql(n_docs)},
     s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
              media_id % 12 = 2 AS gif,
              media_id % 12 <> 2 AND media_id % 3 = 2 AS audio,
              media_id % 12 <> 2 AND media_id % 3 = 1 AS video
@@ -388,7 +481,7 @@ _MOTION_KINDS = ("image-gif", "video-avi", "video-mjpeg", "video-mp4", "video-mk
 @query(
     "multimodal_decode_features_sig",
     oracle=f"""
-    WITH {_MEDIA_SIG_SQL}
+    WITH {_media_sig_sql(100)}
     SELECT media_id, kind,
       CAST(CASE WHEN audio THEN 16000
                 WHEN video THEN 6 + s0 % 7
@@ -471,7 +564,7 @@ def multimodal_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "multimodal_thumbnail_sig",
     oracle=f"""
-    WITH {_MEDIA_SIG_SQL},
+    WITH {_media_sig_sql(100)},
     dims AS (
       SELECT media_id, kind,
              8 + s0 % 9 AS w, 8 + s1 % 9 AS h
@@ -561,7 +654,7 @@ def _frames_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "multimodal_frame_sample_sig",
     oracle=f"""
-    WITH {_MEDIA_SIG_SQL},
+    WITH {_media_sig_sql(100)},
     m AS (
       -- per-media frame-mark count and emitted-frame byte size,
       -- re-derived from the synthesis rules: audio is 2 s of PCM
@@ -1518,15 +1611,12 @@ def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "video_scene_cuts_sig",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {SCENE_DOCS}
-    ),
+    WITH {_base_sql(SCENE_DOCS)},
     s AS (
       SELECT media_id,
         CASE media_id % 4 WHEN 0 THEN 'avi-dib' WHEN 1 THEN 'avi-mjpg'
              WHEN 2 THEN 'mp4' ELSE 'mkv' END AS container,
-        2 + CAST(('0x' || substr(dg, 5, 2)) AS INT) % 3 AS n_scenes,
+        2 + {_dg_byte(2)} % 3 AS n_scenes,
         2 + CAST(('0x' || substr(sha256(dg || '-0'), 1, 2)) AS INT) % 3 AS f0,
         2 + CAST(('0x' || substr(sha256(dg || '-1'), 1, 2)) AS INT) % 3 AS f1,
         2 + CAST(('0x' || substr(sha256(dg || '-2'), 1, 2)) AS INT) % 3 AS f2,
@@ -1701,37 +1791,8 @@ def multimodal_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_probe_meta_sig",
-    oracle="""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < 200
-    ),
-    s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             media_id % 12 = 2 AS gif,
-             media_id % 12 <> 2 AND media_id % 3 = 2 AS audio,
-             media_id % 12 <> 2 AND media_id % 3 = 1 AS video
-      FROM base
-    ),
-    k AS (
-      SELECT *,
-        CASE
-          WHEN gif THEN 'image-gif'
-          WHEN audio AND media_id % 12 = 8 THEN 'audio-flac'
-          WHEN audio THEN 'audio-wav'
-          WHEN video AND media_id % 12 = 1 THEN 'video-mjpeg'
-          WHEN video AND media_id % 12 = 7 THEN 'video-mp4'
-          WHEN video AND media_id % 12 = 10 THEN 'video-mkv'
-          WHEN video THEN 'video-avi'
-          WHEN media_id % 6 = 0 THEN 'image-jpeg'
-          WHEN media_id % 12 = 3 THEN 'image-png'
-          ELSE 'image-bmp'
-        END AS kind
-      FROM s
-    )
+    oracle=f"""
+    WITH {_media_sig_sql(200)}
     SELECT media_id, kind,
       CASE WHEN kind = 'image-gif' THEN 'gif'
            WHEN kind = 'audio-flac' THEN 'flac'
@@ -1905,13 +1966,10 @@ SPS_DOCS = 80
 @query(
     "video_sps_probe",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {SPS_DOCS}
-    ), s AS (
+    WITH {_base_sql(SPS_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
              media_id % 4 AS v
       FROM base
     )
@@ -1961,13 +2019,8 @@ def video_sps_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one Arrow-batched mapInPandas pass, header bytes per
     object; at 100 TB this is the pass that lets the media pipeline
     filter real video by resolution/profile before paying any decode."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < SPS_DOCS
-    )
-
-    def build_and_probe(batches):
+    def build_and_probe(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -1979,62 +2032,49 @@ def video_sps_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_media,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (60 + dg[0] % 100)
-                h = 2 * (40 + dg[1] % 100)
-                v = mid % 4
-                codec = "h264" if v in (0, 1) else "hevc"
-                if codec == "h264":
-                    prof, lev = (66, 30) if mid % 2 == 0 else (100, 41)
-                else:
-                    prof, lev = (1, 93) if mid % 2 == 0 else (2, 120)
-                n_frames = 3 + dg[1] % 4
-                enc = encode_mp4_coded if v in (0, 2) else encode_mkv_coded
-                dec = decode_mp4 if v in (0, 2) else decode_mkv
-                payload = enc(
-                    w, h, codec=codec, n_frames=n_frames,
-                    profile=prof, level=lev,
-                )
-                p = probe_media(payload)
-                try:
-                    dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    decodable = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "codec": p["codec"],
-                        "container": "mp4" if v in (0, 2) else "mkv",
-                        "width": p["width"],
-                        "height": p["height"],
-                        "profile": p["profile"],
-                        "tier": p["tier"],
-                        "bit_depth": p["bit_depth"],
-                        "chroma_fmt": p["chroma_format"],
-                        "n_level": p["level"],
-                        "n_frames": p["n_frames"],
-                        "decodable": decodable,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "container", "width", "height",
-                    "profile", "tier", "bit_depth", "chroma_fmt",
-                    "n_level", "n_frames", "decodable",
-                ],
-            )
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (60 + dg[0] % 100)
+        h = 2 * (40 + dg[1] % 100)
+        v = mid % 4
+        codec = "h264" if v in (0, 1) else "hevc"
+        if codec == "h264":
+            prof, lev = (66, 30) if mid % 2 == 0 else (100, 41)
+        else:
+            prof, lev = (1, 93) if mid % 2 == 0 else (2, 120)
+        n_frames = 3 + dg[1] % 4
+        enc = encode_mp4_coded if v in (0, 2) else encode_mkv_coded
+        dec = decode_mp4 if v in (0, 2) else decode_mkv
+        payload = enc(
+            w, h, codec=codec, n_frames=n_frames,
+            profile=prof, level=lev,
+        )
+        p = probe_media(payload)
+        try:
+            dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            decodable = 0
+        return {
+            "media_id": mid,
+            "codec": p["codec"],
+            "container": "mp4" if v in (0, 2) else "mkv",
+            "width": p["width"],
+            "height": p["height"],
+            "profile": p["profile"],
+            "tier": p["tier"],
+            "bit_depth": p["bit_depth"],
+            "chroma_fmt": p["chroma_format"],
+            "n_level": p["level"],
+            "n_frames": p["n_frames"],
+            "decodable": decodable,
+        }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        build_and_probe,
+    return _fixture_lane(
+        spark, sf_dir, SPS_DOCS,
         "media_id bigint, codec string, container string, width int, "
         "height int, profile int, tier int, bit_depth int, "
         "chroma_fmt int, n_level int, n_frames int, decodable int",
+        build_and_probe,
     )
 
 
@@ -2044,14 +2084,11 @@ MPEG_AUDIO_DOCS = 12  # bounded: header synthesis only
 @query(
     "audio_mpeg_probe",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {MPEG_AUDIO_DOCS}
-    ), s AS (
+    WITH {_base_sql(MPEG_AUDIO_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -2087,13 +2124,8 @@ def audio_mpeg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched mapInPandas pass, header bytes per
     object — the bulk-audio analog of video_sps_probe."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < MPEG_AUDIO_DOCS
-    )
-
-    def build_and_probe(batches):
+    def build_and_probe(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -2105,67 +2137,52 @@ def audio_mpeg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_mp3,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                channels = 1 + dg[0] % 2
-                n_frames = 5 + dg[2] % 60
-                if mid % 2 == 0:
-                    rate = (44100, 48000, 32000, 22050)[dg[1] % 4]
-                    payload = write_mp3(channels, rate, n_frames)
-                else:
-                    rate = (48000, 44100, 24000, 16000)[dg[1] % 4]
-                    payload = write_adts_aac(channels, rate, n_frames)
-                p = probe_media(payload)
-                decodable = 0
-                for dec in (decode_wav, decode_flac):
-                    try:
-                        dec(payload)
-                        decodable = 1
-                    except MediaFormatError:
-                        pass
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "codec": p["codec"],
-                        "channels": p["channels"],
-                        "sample_rate": p["sample_rate"],
-                        "n_frames": p["n_frames"],
-                        "n_samples": p["n_samples"],
-                        "decodable": decodable,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "channels", "sample_rate",
-                    "n_frames", "n_samples", "decodable",
-                ],
-            )
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        channels = 1 + dg[0] % 2
+        n_frames = 5 + dg[2] % 60
+        if mid % 2 == 0:
+            rate = (44100, 48000, 32000, 22050)[dg[1] % 4]
+            payload = write_mp3(channels, rate, n_frames)
+        else:
+            rate = (48000, 44100, 24000, 16000)[dg[1] % 4]
+            payload = write_adts_aac(channels, rate, n_frames)
+        p = probe_media(payload)
+        decodable = 0
+        for dec in (decode_wav, decode_flac):
+            try:
+                dec(payload)
+                decodable = 1
+            except MediaFormatError:
+                pass
+        return {
+            "media_id": mid,
+            "codec": p["codec"],
+            "channels": p["channels"],
+            "sample_rate": p["sample_rate"],
+            "n_frames": p["n_frames"],
+            "n_samples": p["n_samples"],
+            "decodable": decodable,
+        }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        build_and_probe,
+    return _fixture_lane(
+        spark, sf_dir, MPEG_AUDIO_DOCS,
         "media_id bigint, codec string, channels int, "
         "sample_rate int, n_frames int, n_samples bigint, "
         "decodable int",
+        build_and_probe,
     )
 
 
 @query(
     "audio_mpeg_index",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {MPEG_AUDIO_DOCS}
-    ), s AS (
+    WITH {_base_sql(MPEG_AUDIO_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4
       FROM base
     ), p AS (
       SELECT media_id, s0, s2, s3, s4,
@@ -2206,9 +2223,7 @@ def audio_mpeg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
            THEN n * ((CASE WHEN v1 THEN 144000 ELSE 72000 END)
                      * br // rate)
            ELSE n * (7 + 32 + s4 % 64) END AS BIGINT) AS bytes_total,
-      CAST(1 AS INT) AS index_tiles,
-      CAST(1 AS INT) AS probe_frames_agree,
-      CAST(1 AS INT) AS xing_agrees
+      {_flags_sql("index_tiles", "probe_frames_agree", "xing_agrees")}
     FROM q
     """,
 )
@@ -2236,13 +2251,8 @@ def audio_mpeg_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched mapInPandas pass, same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < MPEG_AUDIO_DOCS
-    )
-
-    def build_and_index(batches):
+    def build_and_index(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -2252,93 +2262,75 @@ def audio_mpeg_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_mp3,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                channels = 1 + dg[0] % 2
-                n_frames = 8 + dg[3] % 24
-                if mid % 2 == 0:
-                    rate = (44100, 48000, 32000, 22050, 24000,
-                            16000)[dg[1] % 6]
-                    v1 = dg[1] % 6 < 3
-                    br = ((96, 128, 160, 192) if v1
-                          else (48, 64, 80, 96))[dg[2] % 4]
-                    period = 1 + dg[4] % 4
-                    with_xing = mid % 4 == 0
-                    payload = write_mp3(
-                        channels, rate, n_frames, br,
-                        mdb_period=period, xing=with_xing,
-                    )
-                else:
-                    rate = (48000, 44100, 32000, 24000, 22050,
-                            16000)[dg[1] % 6]
-                    payload = write_adts_aac(
-                        channels, rate, n_frames, 32 + dg[4] % 64
-                    )
-                ix = audio_frame_index(payload)
-                # Xing VBR header (mp3 with mid%4==0): declared frame
-                # and byte counts must match the walk
-                if ix["codec"] == "mp3":
-                    x = ix.get("xing")
-                    if mid % 4 == 0:
-                        xing_agrees = int(
-                            x is not None
-                            and x["frames"] == ix["n_frames"] - 1
-                            and x["bytes"] == len(payload)
-                        )
-                    else:
-                        xing_agrees = int(x is None)
-                else:
-                    xing_agrees = 1
-                # offsets contiguous from data_start, tiling the file
-                pos = ix["data_start"]
-                tiles = 1
-                for off, ln, _x in ix["frames"]:
-                    if off != pos:
-                        tiles = 0
-                    pos += ln
-                if pos != len(payload):
-                    tiles = 0
-                pm = probe_media(payload)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "codec": ix["codec"],
-                        "channels": ix["channels"],
-                        "sample_rate": ix["sample_rate"],
-                        "n_frames": ix["n_frames"],
-                        "duration_ms": ix["duration_ms"],
-                        "n_seek": len(ix["seek_points"]),
-                        "bytes_total": len(payload),
-                        "index_tiles": tiles,
-                        "probe_frames_agree": int(
-                            pm.get("n_frames") == ix["n_frames"]
-                        ),
-                        "xing_agrees": xing_agrees,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "channels", "sample_rate",
-                    "n_frames", "duration_ms", "n_seek",
-                    "bytes_total", "index_tiles",
-                    "probe_frames_agree", "xing_agrees",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        channels = 1 + dg[0] % 2
+        n_frames = 8 + dg[3] % 24
+        if mid % 2 == 0:
+            rate = (44100, 48000, 32000, 22050, 24000,
+                    16000)[dg[1] % 6]
+            v1 = dg[1] % 6 < 3
+            br = ((96, 128, 160, 192) if v1
+                  else (48, 64, 80, 96))[dg[2] % 4]
+            period = 1 + dg[4] % 4
+            with_xing = mid % 4 == 0
+            payload = write_mp3(
+                channels, rate, n_frames, br,
+                mdb_period=period, xing=with_xing,
             )
+        else:
+            rate = (48000, 44100, 32000, 24000, 22050,
+                    16000)[dg[1] % 6]
+            payload = write_adts_aac(
+                channels, rate, n_frames, 32 + dg[4] % 64
+            )
+        ix = audio_frame_index(payload)
+        # Xing VBR header (mp3 with mid%4==0): declared frame
+        # and byte counts must match the walk
+        if ix["codec"] == "mp3":
+            x = ix.get("xing")
+            if mid % 4 == 0:
+                xing_agrees = int(
+                    x is not None
+                    and x["frames"] == ix["n_frames"] - 1
+                    and x["bytes"] == len(payload)
+                )
+            else:
+                xing_agrees = int(x is None)
+        else:
+            xing_agrees = 1
+        # offsets contiguous from data_start, tiling the file
+        pos = ix["data_start"]
+        tiles = 1
+        for off, ln, _x in ix["frames"]:
+            if off != pos:
+                tiles = 0
+            pos += ln
+        if pos != len(payload):
+            tiles = 0
+        pm = probe_media(payload)
+        return {
+            "media_id": mid,
+            "codec": ix["codec"],
+            "channels": ix["channels"],
+            "sample_rate": ix["sample_rate"],
+            "n_frames": ix["n_frames"],
+            "duration_ms": ix["duration_ms"],
+            "n_seek": len(ix["seek_points"]),
+            "bytes_total": len(payload),
+            "index_tiles": tiles,
+            "probe_frames_agree": int(
+                pm.get("n_frames") == ix["n_frames"]
+            ),
+            "xing_agrees": xing_agrees,
+        }
 
-    return (
-        docs.select("doc_id", "text")
-        .repartition(MPEG_AUDIO_DOCS)
-        .mapInPandas(
-            build_and_index,
-            "media_id bigint, codec string, channels int, "
-            "sample_rate int, n_frames int, duration_ms bigint, "
-            "n_seek int, bytes_total bigint, index_tiles int, "
-            "probe_frames_agree int, xing_agrees int",
-        )
+    return _fixture_lane(
+        spark, sf_dir, MPEG_AUDIO_DOCS,
+        "media_id bigint, codec string, channels int, "
+        "sample_rate int, n_frames int, duration_ms bigint, "
+        "n_seek int, bytes_total bigint, index_tiles int, "
+        "probe_frames_agree int, xing_agrees int",
+        build_and_index,
     )
 
 
@@ -2348,13 +2340,10 @@ OGG_DOCS = 12  # bounded: header synthesis only, no entropy coding
 @query(
     "audio_ogg_probe",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {OGG_DOCS}
-    ), s AS (
+    WITH {_base_sql(OGG_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
              CAST(('0x' || substr(dg, 5, 4)) AS INT) AS s2
       FROM base
     )
@@ -2388,13 +2377,8 @@ def audio_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched mapInPandas pass, header bytes per
     object — the audio analog of video_sps_probe."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < OGG_DOCS
-    )
-
-    def build_and_probe(batches):
+    def build_and_probe(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -2406,53 +2390,41 @@ def audio_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_ogg_vorbis,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                channels = 1 + dg[0] % 2
-                n_samples = 4800 + (
-                    int.from_bytes(dg[2:4], "big") % 96000
-                )
-                if mid % 2 == 0:
-                    rate = (8000, 16000, 24000, 48000)[dg[1] % 4]
-                    payload = write_ogg_opus(channels, rate, n_samples)
-                else:
-                    rate = (22050, 32000, 44100, 48000)[dg[1] % 4]
-                    payload = write_ogg_vorbis(
-                        channels, rate, n_samples
-                    )
-                p = probe_media(payload)
-                decodable = 0
-                for dec in (decode_wav, decode_flac):
-                    try:
-                        dec(payload)
-                        decodable = 1
-                    except MediaFormatError:
-                        pass
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "codec": p["codec"],
-                        "channels": p["channels"],
-                        "sample_rate": p["sample_rate"],
-                        "n_samples": p["n_samples"],
-                        "decodable": decodable,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "channels", "sample_rate",
-                    "n_samples", "decodable",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        channels = 1 + dg[0] % 2
+        n_samples = 4800 + (
+            int.from_bytes(dg[2:4], "big") % 96000
+        )
+        if mid % 2 == 0:
+            rate = (8000, 16000, 24000, 48000)[dg[1] % 4]
+            payload = write_ogg_opus(channels, rate, n_samples)
+        else:
+            rate = (22050, 32000, 44100, 48000)[dg[1] % 4]
+            payload = write_ogg_vorbis(
+                channels, rate, n_samples
             )
+        p = probe_media(payload)
+        decodable = 0
+        for dec in (decode_wav, decode_flac):
+            try:
+                dec(payload)
+                decodable = 1
+            except MediaFormatError:
+                pass
+        return {
+            "media_id": mid,
+            "codec": p["codec"],
+            "channels": p["channels"],
+            "sample_rate": p["sample_rate"],
+            "n_samples": p["n_samples"],
+            "decodable": decodable,
+        }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        build_and_probe,
+    return _fixture_lane(
+        spark, sf_dir, OGG_DOCS,
         "media_id bigint, codec string, channels int, "
         "sample_rate int, n_samples bigint, decodable int",
+        build_and_probe,
     )
 
 
@@ -2462,15 +2434,12 @@ AV1_DOCS = 12  # bounded: header synthesis only, no entropy coding
 @query(
     "video_av1_probe",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {AV1_DOCS}
-    ), s AS (
+    WITH {_base_sql(AV1_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3
       FROM base
     ), p AS (
       SELECT media_id, s0, s1, s2, s3,
@@ -2516,13 +2485,8 @@ def video_av1_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched mapInPandas pass, header bytes per
     object — the same funnel economics as video_sps_probe."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < AV1_DOCS
-    )
-
-    def build_and_probe(batches):
+    def build_and_probe(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -2534,63 +2498,50 @@ def video_av1_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_media,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (60 + dg[0] % 100) + (dg[0] % 2)
-                h = 2 * (40 + dg[1] % 100) + (dg[1] % 2)
-                prof = mid % 3
-                lev = 8 + dg[2] % 12
-                tier = dg[3] % 2  # levels are all > 7 → bit present
-                bit_depth = 8 + 2 * (
-                    (dg[3] // 2) % (3 if prof == 2 else 2)
-                )
-                n_frames = 3 + dg[1] % 4
-                enc = encode_mp4_coded if mid % 2 == 0 else encode_mkv_coded
-                dec = decode_mp4 if mid % 2 == 0 else decode_mkv
-                payload = enc(
-                    w, h, codec="av1", n_frames=n_frames,
-                    profile=prof, level=lev, tier=tier,
-                    bit_depth=bit_depth,
-                )
-                p = probe_media(payload)
-                try:
-                    dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    decodable = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "codec": p["codec"],
-                        "container": "mp4" if mid % 2 == 0 else "mkv",
-                        "width": p["width"],
-                        "height": p["height"],
-                        "profile": p["profile"],
-                        "tier": p["tier"],
-                        "bit_depth": p["bit_depth"],
-                        "chroma_fmt": p["chroma_format"],
-                        "n_level": p["level"],
-                        "n_frames": p["n_frames"],
-                        "decodable": decodable,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "container", "width", "height",
-                    "profile", "tier", "bit_depth", "chroma_fmt",
-                    "n_level", "n_frames", "decodable",
-                ],
-            )
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (60 + dg[0] % 100) + (dg[0] % 2)
+        h = 2 * (40 + dg[1] % 100) + (dg[1] % 2)
+        prof = mid % 3
+        lev = 8 + dg[2] % 12
+        tier = dg[3] % 2  # levels are all > 7 → bit present
+        bit_depth = 8 + 2 * (
+            (dg[3] // 2) % (3 if prof == 2 else 2)
+        )
+        n_frames = 3 + dg[1] % 4
+        enc = encode_mp4_coded if mid % 2 == 0 else encode_mkv_coded
+        dec = decode_mp4 if mid % 2 == 0 else decode_mkv
+        payload = enc(
+            w, h, codec="av1", n_frames=n_frames,
+            profile=prof, level=lev, tier=tier,
+            bit_depth=bit_depth,
+        )
+        p = probe_media(payload)
+        try:
+            dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            decodable = 0
+        return {
+            "media_id": mid,
+            "codec": p["codec"],
+            "container": "mp4" if mid % 2 == 0 else "mkv",
+            "width": p["width"],
+            "height": p["height"],
+            "profile": p["profile"],
+            "tier": p["tier"],
+            "bit_depth": p["bit_depth"],
+            "chroma_fmt": p["chroma_format"],
+            "n_level": p["level"],
+            "n_frames": p["n_frames"],
+            "decodable": decodable,
+        }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        build_and_probe,
+    return _fixture_lane(
+        spark, sf_dir, AV1_DOCS,
         "media_id bigint, codec string, container string, width int, "
         "height int, profile int, tier int, bit_depth int, "
         "chroma_fmt int, n_level int, n_frames int, decodable int",
+        build_and_probe,
     )
 
 
@@ -2600,18 +2551,15 @@ HEVC_DOCS = 12  # bounded: header synthesis only, no entropy coding
 @query(
     "video_hevc_probe",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {HEVC_DOCS}
-    ), s AS (
+    WITH {_base_sql(HEVC_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5,
+             {_dg_byte(6)} AS s6
       FROM base
     ), p AS (
       SELECT media_id, s0, s1, s2, s3, s4, s5,
@@ -2659,13 +2607,8 @@ def video_hevc_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched mapInPandas pass, header bytes per
     object — the same funnel economics as video_sps_probe."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < HEVC_DOCS
-    )
-
-    def build_and_probe(batches):
+    def build_and_probe(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -2679,78 +2622,64 @@ def video_hevc_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_media,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (60 + dg[0] % 100)
-                h = 2 * (40 + dg[1] % 100)
-                prof = 1 + mid % 3
-                tier = dg[2] % 2
-                bit_depth = 8 + 2 * (dg[3] % 3)
-                chroma = 1 + dg[4] % 3
-                lev = 60 + 3 * (dg[5] % 40)
-                n_frames = 3 + dg[1] % 4
-                sync_every = 2 + dg[6] % 3
-                enc = encode_mp4_coded if mid % 2 == 0 else encode_mkv_coded
-                dec = decode_mp4 if mid % 2 == 0 else decode_mkv
-                kf_fn = (
-                    mp4_keyframe_index if mid % 2 == 0
-                    else mkv_block_keyframes
-                )
-                payload = enc(
-                    w, h, codec="hevc", n_frames=n_frames,
-                    profile=prof, level=lev, tier=tier,
-                    chroma_format=chroma, bit_depth=bit_depth,
-                    sync_every=sync_every,
-                )
-                p = probe_media(payload)
-                kf = kf_fn(payload)
-                if len(kf) != p["n_keyframes"]:
-                    raise AssertionError(
-                        "probe/container keyframe index disagree: "
-                        f"{kf} vs {p['n_keyframes']}"
-                    )
-                try:
-                    dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    decodable = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "codec": p["codec"],
-                        "container": "mp4" if mid % 2 == 0 else "mkv",
-                        "width": p["width"],
-                        "height": p["height"],
-                        "profile": p["profile"],
-                        "tier": p["tier"],
-                        "bit_depth": p["bit_depth"],
-                        "chroma_fmt": p["chroma_format"],
-                        "n_level": p["level"],
-                        "n_frames": p["n_frames"],
-                        "n_keyframes": p["n_keyframes"],
-                        "kf_csv": ",".join(str(s) for s in kf),
-                        "decodable": decodable,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "container", "width", "height",
-                    "profile", "tier", "bit_depth", "chroma_fmt",
-                    "n_level", "n_frames", "n_keyframes", "kf_csv",
-                    "decodable",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (60 + dg[0] % 100)
+        h = 2 * (40 + dg[1] % 100)
+        prof = 1 + mid % 3
+        tier = dg[2] % 2
+        bit_depth = 8 + 2 * (dg[3] % 3)
+        chroma = 1 + dg[4] % 3
+        lev = 60 + 3 * (dg[5] % 40)
+        n_frames = 3 + dg[1] % 4
+        sync_every = 2 + dg[6] % 3
+        enc = encode_mp4_coded if mid % 2 == 0 else encode_mkv_coded
+        dec = decode_mp4 if mid % 2 == 0 else decode_mkv
+        kf_fn = (
+            mp4_keyframe_index if mid % 2 == 0
+            else mkv_block_keyframes
+        )
+        payload = enc(
+            w, h, codec="hevc", n_frames=n_frames,
+            profile=prof, level=lev, tier=tier,
+            chroma_format=chroma, bit_depth=bit_depth,
+            sync_every=sync_every,
+        )
+        p = probe_media(payload)
+        kf = kf_fn(payload)
+        if len(kf) != p["n_keyframes"]:
+            raise AssertionError(
+                "probe/container keyframe index disagree: "
+                f"{kf} vs {p['n_keyframes']}"
             )
+        try:
+            dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            decodable = 0
+        return {
+            "media_id": mid,
+            "codec": p["codec"],
+            "container": "mp4" if mid % 2 == 0 else "mkv",
+            "width": p["width"],
+            "height": p["height"],
+            "profile": p["profile"],
+            "tier": p["tier"],
+            "bit_depth": p["bit_depth"],
+            "chroma_fmt": p["chroma_format"],
+            "n_level": p["level"],
+            "n_frames": p["n_frames"],
+            "n_keyframes": p["n_keyframes"],
+            "kf_csv": ",".join(str(s) for s in kf),
+            "decodable": decodable,
+        }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        build_and_probe,
+    return _fixture_lane(
+        spark, sf_dir, HEVC_DOCS,
         "media_id bigint, codec string, container string, width int, "
         "height int, profile int, tier int, bit_depth int, "
         "chroma_fmt int, n_level int, n_frames int, n_keyframes int, "
         "kf_csv string, decodable int",
+        build_and_probe,
     )
 
 
@@ -2780,14 +2709,11 @@ def _intra_fixture(mid: int, text: str):
 @query(
     "video_intra_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {INTRA_DOCS}
-    ), s AS (
+    WITH {_base_sql(INTRA_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -2799,8 +2725,7 @@ def _intra_fixture(mid: int, text: str):
         AS frame_bytes,
       CAST(1 AS INT) AS decodable,
       CAST(0 AS INT) AS inter_decodable,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact
+      {_flags_sql("containers_agree", "recon_exact")}
     FROM s
     """,
 )
@@ -2827,13 +2752,8 @@ def video_intra_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: task-local Arrow-batched mapInPandas; payloads never
     shuffle; at 100 TB this is the keyframe-thumbnail pass that runs
     AFTER the SPS probe filtered by resolution/profile."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INTRA_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         from reindexer_spark.codecs import (
             MediaFormatError,
             decode_mkv,
@@ -2842,89 +2762,73 @@ def video_intra_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_mp4_coded,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _intra_fixture(
-                    mid, r.text
-                )
-                from reindexer_spark.h264 import encode_h264_intra
+        w, h, n_frames, qp, frames, container = _intra_fixture(
+            mid, text
+        )
+        from reindexer_spark.h264 import encode_h264_intra
 
-                _sps, _pps, _nals, recon = encode_h264_intra(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                mp4 = encode_mp4_coded(w, h, intra_frames=frames, qp=qp)
-                mkv = encode_mkv_coded(w, h, intra_frames=frames, qp=qp)
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                # the same bitstream through the OTHER container
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                # the dummy-sample (inter-style) fixture must quarantine
-                try:
-                    dec(
-                        (encode_mp4_coded if container == "mp4"
-                         else encode_mkv_coded)(w, h, n_frames=n_frames)
-                    )
-                    inter_decodable = 1
-                except MediaFormatError:
-                    inter_decodable = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "frame_bytes": len(out[0]) if out else 0,
-                        "decodable": decodable,
-                        "inter_decodable": inter_decodable,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height", "n_frames",
-                    "frame_bytes", "decodable", "inter_decodable",
-                    "containers_agree", "recon_exact",
-                ],
+        _sps, _pps, _nals, recon = encode_h264_intra(
+            w, h, frames, qp=qp, return_recon=True
+        )
+        mp4 = encode_mp4_coded(w, h, intra_frames=frames, qp=qp)
+        mkv = encode_mkv_coded(w, h, intra_frames=frames, qp=qp)
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, _sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out = []
+            decodable = 0
+        # the same bitstream through the OTHER container
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
             )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        # the dummy-sample (inter-style) fixture must quarantine
+        try:
+            dec(
+                (encode_mp4_coded if container == "mp4"
+                 else encode_mkv_coded)(w, h, n_frames=n_frames)
+            )
+            inter_decodable = 1
+        except MediaFormatError:
+            inter_decodable = 0
+        recon_exact = int(out == recon)
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "frame_bytes": len(out[0]) if out else 0,
+            "decodable": decodable,
+            "inter_decodable": inter_decodable,
+            "containers_agree": agree,
+            "recon_exact": recon_exact,
+        }
 
-    return docs.select("doc_id", "text").repartition(INTRA_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, INTRA_DOCS,
         "media_id bigint, container string, width int, height int, "
         "n_frames int, frame_bytes bigint, decodable int, "
         "inter_decodable int, containers_agree int, recon_exact int",
+        build_and_decode,
     )
 
 
 @query(
     "video_intra_thumbnail",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {INTRA_DOCS}
-    ), s AS (
+    WITH {_base_sql(INTRA_DOCS)}, s AS (
       SELECT media_id,
-             2 * (8 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 25) AS w,
-             2 * (8 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 17) AS h
+             2 * (8 + {_dg_byte(0)} % 25) AS w,
+             2 * (8 + {_dg_byte(1)} % 17) AS h
       FROM base
     ), t AS (
       SELECT media_id, w, h,
@@ -2954,13 +2858,8 @@ def video_intra_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     so decode geometry, the video→image handoff, and the thumbnail
     encoder are all value-checked.  Payloads stay task-local
     (Arrow-batched mapInPandas, nothing binary shuffles)."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INTRA_DOCS
-    )
-
-    def thumb(batches):
+    def thumb(mid, text):
         from reindexer_spark.codecs import (
             MediaFormatError,
             PurePythonResizer,
@@ -2971,54 +2870,40 @@ def video_intra_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_mp4_coded,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, _n, qp, frames, container = _intra_fixture(
-                    mid, r.text
-                )
-                enc = encode_mp4_coded if container == "mp4" else encode_mkv_coded
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                payload = enc(w, h, intra_frames=frames, qp=qp)
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    # keyframe -> image path -> production resizer
-                    t = PurePythonResizer().resize(
-                        encode_bmp(dw, dh, out[0]), THUMB_MAX_DIM
-                    )
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "container": container,
-                            "width": dw,
-                            "height": dh,
-                            "thumb_w": t["thumb_w"],
-                            "thumb_h": t["thumb_h"],
-                            "thumb_bytes": len(t["thumbnail"]),
-                            "decoded": 1,
-                        }
-                    )
-                except MediaFormatError:
-                    rows.append(
-                        {
-                            "media_id": mid, "container": container,
-                            "width": 0, "height": 0, "thumb_w": 0,
-                            "thumb_h": 0, "thumb_bytes": 0, "decoded": 0,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "thumb_w", "thumb_h", "thumb_bytes", "decoded",
-                ],
+        w, h, _n, qp, frames, container = _intra_fixture(
+            mid, text
+        )
+        enc = encode_mp4_coded if container == "mp4" else encode_mkv_coded
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        payload = enc(w, h, intra_frames=frames, qp=qp)
+        try:
+            dw, dh, _durs, out, _sync = dec(payload)
+            # keyframe -> image path -> production resizer
+            t = PurePythonResizer().resize(
+                encode_bmp(dw, dh, out[0]), THUMB_MAX_DIM
             )
+            return {
+                "media_id": mid,
+                "container": container,
+                "width": dw,
+                "height": dh,
+                "thumb_w": t["thumb_w"],
+                "thumb_h": t["thumb_h"],
+                "thumb_bytes": len(t["thumbnail"]),
+                "decoded": 1,
+            }
+        except MediaFormatError:
+            return {
+                "media_id": mid, "container": container,
+                "width": 0, "height": 0, "thumb_w": 0,
+                "thumb_h": 0, "thumb_bytes": 0, "decoded": 0,
+            }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        thumb,
+    return _fixture_lane(
+        spark, sf_dir, INTRA_DOCS,
         "media_id bigint, container string, width int, height int, "
         "thumb_w int, thumb_h int, thumb_bytes bigint, decoded int",
+        thumb,
     )
 
 
@@ -3064,14 +2949,11 @@ def _inter_fixture(mid: int, text: str):
 @query(
     "video_inter_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {INTER_DOCS}
-    ), s AS (
+    WITH {_base_sql(INTER_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -3081,11 +2963,10 @@ def _inter_fixture(mid: int, text: str):
       CAST(3 + s2 % 3 AS INT) AS n_frames,
       CAST(2 * (16 + s0 % 13) * 2 * (16 + s1 % 9) * 3 AS BIGINT)
         AS frame_bytes,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS p_smaller,
-      CAST(1 AS INT) AS recon_exact
+      {_flags_sql(
+          "decodable", "only_first_sync", "containers_agree", "p_smaller",
+          "recon_exact",
+      )}
     FROM s
     """,
 )
@@ -3114,13 +2995,8 @@ def video_inter_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, payloads never shuffle; at 100 TB this is the pass
     that makes real crawl video (overwhelmingly inter-predicted)
     decodable instead of probe-only."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INTER_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         from reindexer_spark.codecs import (
             MediaFormatError,
             decode_mkv,
@@ -3130,83 +3006,70 @@ def video_inter_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.h264 import encode_h264_intra, encode_h264_ippp
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                _s, _p, p_nals, recon = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                _s, _p, i_nals = encode_h264_intra(w, h, frames, qp=qp)
-                p_smaller = int(
-                    sum(len(n) for n in p_nals[1:])
-                    < sum(len(n) for n in i_nals[1:])
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and sync[0]
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "frame_bytes": len(out[0]) if out else 0,
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "p_smaller": p_smaller,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height", "n_frames",
-                    "frame_bytes", "decodable", "only_first_sync",
-                    "containers_agree", "p_smaller", "recon_exact",
-                ],
+        w, h, n_frames, qp, frames, container = _inter_fixture(
+            mid, text
+        )
+        _s, _p, p_nals, recon = encode_h264_ippp(
+            w, h, frames, qp=qp, return_recon=True
+        )
+        _s, _p, i_nals = encode_h264_intra(w, h, frames, qp=qp)
+        p_smaller = int(
+            sum(len(n) for n in p_nals[1:])
+            < sum(len(n) for n in i_nals[1:])
+        )
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out, sync = [], []
+            decodable = 0
+        only_first_sync = int(
+            len(sync) == n_frames
+            and sync[0]
+            and not any(sync[1:])
+        )
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
             )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        recon_exact = int(out == recon)
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "frame_bytes": len(out[0]) if out else 0,
+            "decodable": decodable,
+            "only_first_sync": only_first_sync,
+            "containers_agree": agree,
+            "p_smaller": p_smaller,
+            "recon_exact": recon_exact,
+        }
 
     # each row is seconds of encoder CPU: spread the bounded fixture
     # set across tasks (the single-file documents scan is 1 partition,
     # which serialized the whole lane through one core — round 11)
-    return docs.select("doc_id", "text").repartition(INTER_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, INTER_DOCS,
         "media_id bigint, container string, width int, height int, "
         "n_frames int, frame_bytes bigint, decodable int, "
         "only_first_sync int, containers_agree int, p_smaller int, "
         "recon_exact int",
+        build_and_decode,
     )
 
 
@@ -3216,14 +3079,11 @@ BSLICE_DOCS = 12  # bounded: two motion searches per B macroblock
 @query(
     "video_bslice_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {BSLICE_DOCS}
-    ), s AS (
+    WITH {_base_sql(BSLICE_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -3232,11 +3092,10 @@ BSLICE_DOCS = 12  # bounded: two motion searches per B macroblock
       CAST(2 * (16 + s1 % 9) AS INT) AS height,
       CAST(3 + s2 % 3 AS INT) AS n_frames,
       CAST((3 + s2 % 3 - 1) // 2 AS INT) AS n_b_frames,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS b_smaller,
-      CAST(1 AS INT) AS recon_exact
+      {_flags_sql(
+          "decodable", "only_first_sync", "containers_agree", "b_smaller",
+          "recon_exact",
+      )}
     FROM s
     """,
 )
@@ -3268,13 +3127,8 @@ def video_bslice_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < BSLICE_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         from reindexer_spark.codecs import (
             MediaFormatError,
             decode_mkv,
@@ -3287,87 +3141,69 @@ def video_bslice_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_h264_ipb,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                _s, _p, b_nals, recon = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                _s, _p, i_nals = encode_h264_intra(w, h, frames, qp=qp)
-                b_idx = [i for i in range(2, n_frames, 2)]
-                n_b = sum(1 for i in b_idx if b_nals[i][0] >> 5 == 0)
-                b_smaller = int(
-                    sum(len(b_nals[i]) for i in b_idx)
-                    < sum(len(i_nals[i]) for i in b_idx)
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and sync[0]
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "n_b_frames": n_b,
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "b_smaller": b_smaller,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "n_b_frames", "decodable",
-                    "only_first_sync", "containers_agree", "b_smaller",
-                    "recon_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(BSLICE_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, n_b_frames int, decodable int, "
-            "only_first_sync int, containers_agree int, b_smaller int, "
-            "recon_exact int",
+        w, h, n_frames, qp, frames, container = _inter_fixture(
+            mid, text
         )
+        _s, _p, b_nals, recon = encode_h264_ipb(
+            w, h, frames, qp=qp, return_recon=True
+        )
+        _s, _p, i_nals = encode_h264_intra(w, h, frames, qp=qp)
+        b_idx = [i for i in range(2, n_frames, 2)]
+        n_b = sum(1 for i in b_idx if b_nals[i][0] >> 5 == 0)
+        b_smaller = int(
+            sum(len(b_nals[i]) for i in b_idx)
+            < sum(len(i_nals[i]) for i in b_idx)
+        )
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out, sync = [], []
+            decodable = 0
+        only_first_sync = int(
+            len(sync) == n_frames
+            and sync[0]
+            and not any(sync[1:])
+        )
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        recon_exact = int(out == recon)
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "n_b_frames": n_b,
+            "decodable": decodable,
+            "only_first_sync": only_first_sync,
+            "containers_agree": agree,
+            "b_smaller": b_smaller,
+            "recon_exact": recon_exact,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, BSLICE_DOCS,
+        "media_id bigint, container string, width int, height int, "
+        "n_frames int, n_b_frames int, decodable int, "
+        "only_first_sync int, containers_agree int, b_smaller int, "
+        "recon_exact int",
+        build_and_decode,
     )
 
 
@@ -3377,14 +3213,11 @@ TDIRECT_DOCS = 10  # bounded: two chains (temporal IPB + multiref) per doc
 @query(
     "video_bdirect_temporal",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TDIRECT_DOCS}
-    ), s AS (
+    WITH {_base_sql(TDIRECT_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -3393,13 +3226,10 @@ TDIRECT_DOCS = 10  # bounded: two chains (temporal IPB + multiref) per doc
       CAST(2 * (16 + s1 % 9) AS INT) AS height,
       CAST(3 + s2 % 3 AS INT) AS n_frames,
       CAST((3 + s2 % 3 - 1) // 2 AS INT) AS n_b_frames,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS temporal_flag,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS multiref_recon_exact,
-      CAST(1 AS INT) AS multiref_smaller,
-      CAST(1 AS INT) AS ref1_used
+      {_flags_sql(
+          "decodable", "temporal_flag", "containers_agree", "recon_exact",
+          "multiref_recon_exact", "multiref_smaller", "ref1_used",
+      )}
     FROM s
     """,
 )
@@ -3433,13 +3263,8 @@ def video_bdirect_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TDIRECT_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -3463,142 +3288,123 @@ def video_bdirect_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_pps,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                sps, pps, b_nals, recon = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    direct="temporal",
-                )
-                n_b = sum(1 for n in b_nals if n[0] >> 5 == 0)
-                # every B header really signals temporal direct
-                sd = _parse_sps_slice_fields(sps)
-                pd_ = parse_pps(pps)
-                tflag = 1
-                for nal in b_nals:
-                    if nal[0] >> 5 != 0:
-                        continue
-                    rr = _BitReader(_unescape_rbsp(nal[1:]))
-                    _s, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, sd, pd_, idr=False, nal_ref_idc=0
-                    )
-                    if info["direct_spatial"]:
-                        tflag = 0
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-temporal"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-temporal"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                # --- multi-reference leg: flip-flop clip, n_refs 2 vs 1
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[8:16], "big")
-                )
-                sa = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                sb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                ff = [(sa, sb)[i % 2].tobytes() for i in range(5)]
-                msps, mpps, mnals, mrec = encode_h264_ippp(
-                    w, h, ff, qp=qp, return_recon=True, n_refs=2
-                )
-                _s1, _p1, snals = encode_h264_ippp(
-                    w, h, ff, qp=qp, n_refs=1
-                )
-                m_smaller = int(
-                    sum(len(n) for n in mnals)
-                    < sum(len(n) for n in snals)
-                )
-                try:
-                    _mw, _mh, mdec = decode_h264_stream(
-                        msps, mpps, mnals
-                    )
-                    m_exact = int(mdec == mrec)
-                except MediaFormatError:
-                    m_exact = 0
-                # ref1 engagement: the decoder's own motion state
-                msd = _parse_sps_slice_fields(msps)
-                mpd = parse_pps(mpps)
-                refs: list = []
-                ref_pocs: list = []
-                poc_ctx: dict = {}
-                ref1_used = 0
-                for nal in mnals:
-                    sink: dict = {}
-                    pl = decode_frame_nal(
-                        nal, msd, mpd,
-                        ref=refs[0] if refs else None,
-                        motion_sink=sink, poc_ctx=poc_ctx,
-                        refs=refs if len(refs) > 1 else None,
-                        ref_pocs=ref_pocs if refs else None,
-                    )
-                    if (
-                        sink.get("ref0") is not None
-                        and sink["ref0"].max() > 0
-                    ):
-                        ref1_used = 1
-                    refs = [pl] + refs[:7]
-                    ref_pocs = [sink.get("poc")] + ref_pocs[:7]
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "n_b_frames": n_b,
-                        "decodable": decodable,
-                        "temporal_flag": tflag,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                        "multiref_recon_exact": m_exact,
-                        "multiref_smaller": m_smaller,
-                        "ref1_used": ref1_used,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "n_b_frames", "decodable",
-                    "temporal_flag", "containers_agree", "recon_exact",
-                    "multiref_recon_exact", "multiref_smaller",
-                    "ref1_used",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(TDIRECT_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, n_b_frames int, decodable int, "
-            "temporal_flag int, containers_agree int, recon_exact int, "
-            "multiref_recon_exact int, multiref_smaller int, "
-            "ref1_used int",
+        w, h, n_frames, qp, frames, container = _inter_fixture(
+            mid, text
         )
+        sps, pps, b_nals, recon = encode_h264_ipb(
+            w, h, frames, qp=qp, return_recon=True,
+            direct="temporal",
+        )
+        n_b = sum(1 for n in b_nals if n[0] >> 5 == 0)
+        # every B header really signals temporal direct
+        sd = _parse_sps_slice_fields(sps)
+        pd_ = parse_pps(pps)
+        tflag = 1
+        for nal in b_nals:
+            if nal[0] >> 5 != 0:
+                continue
+            rr = _BitReader(_unescape_rbsp(nal[1:]))
+            _s, _q, _d, _a, _b2, info = _parse_slice_header(
+                rr, sd, pd_, idr=False, nal_ref_idc=0
+            )
+            if info["direct_spatial"]:
+                tflag = 0
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-temporal"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-temporal"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out = []
+            decodable = 0
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        recon_exact = int(out == recon)
+        # --- multi-reference leg: flip-flop clip, n_refs 2 vs 1
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        rng = np.random.default_rng(
+            int.from_bytes(dg[8:16], "big")
+        )
+        sa = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        sb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        ff = [(sa, sb)[i % 2].tobytes() for i in range(5)]
+        msps, mpps, mnals, mrec = encode_h264_ippp(
+            w, h, ff, qp=qp, return_recon=True, n_refs=2
+        )
+        _s1, _p1, snals = encode_h264_ippp(
+            w, h, ff, qp=qp, n_refs=1
+        )
+        m_smaller = int(
+            sum(len(n) for n in mnals)
+            < sum(len(n) for n in snals)
+        )
+        try:
+            _mw, _mh, mdec = decode_h264_stream(
+                msps, mpps, mnals
+            )
+            m_exact = int(mdec == mrec)
+        except MediaFormatError:
+            m_exact = 0
+        # ref1 engagement: the decoder's own motion state
+        msd = _parse_sps_slice_fields(msps)
+        mpd = parse_pps(mpps)
+        refs: list = []
+        ref_pocs: list = []
+        poc_ctx: dict = {}
+        ref1_used = 0
+        for nal in mnals:
+            sink: dict = {}
+            pl = decode_frame_nal(
+                nal, msd, mpd,
+                ref=refs[0] if refs else None,
+                motion_sink=sink, poc_ctx=poc_ctx,
+                refs=refs if len(refs) > 1 else None,
+                ref_pocs=ref_pocs if refs else None,
+            )
+            if (
+                sink.get("ref0") is not None
+                and sink["ref0"].max() > 0
+            ):
+                ref1_used = 1
+            refs = [pl] + refs[:7]
+            ref_pocs = [sink.get("poc")] + ref_pocs[:7]
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "n_b_frames": n_b,
+            "decodable": decodable,
+            "temporal_flag": tflag,
+            "containers_agree": agree,
+            "recon_exact": recon_exact,
+            "multiref_recon_exact": m_exact,
+            "multiref_smaller": m_smaller,
+            "ref1_used": ref1_used,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, TDIRECT_DOCS,
+        "media_id bigint, container string, width int, height int, "
+        "n_frames int, n_b_frames int, decodable int, "
+        "temporal_flag int, containers_agree int, recon_exact int, "
+        "multiref_recon_exact int, multiref_smaller int, "
+        "ref1_used int",
+        build_and_decode,
     )
 
 
@@ -3608,14 +3414,11 @@ REFLIST_DOCS = 10  # bounded: two encode chains per doc
 @query(
     "video_reflist_mmco",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {REFLIST_DOCS}
-    ), s AS (
+    WITH {_base_sql(REFLIST_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     ), p AS (
       SELECT media_id, s0, s1,
@@ -3643,10 +3446,9 @@ REFLIST_DOCS = 10  # bounded: two encode chains per doc
         AS poc_type,
       CAST(CASE WHEN variant = 'longterm' THEN 1 ELSE 0 END AS INT)
         AS uses_longterm,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact
+      {_flags_sql(
+          "decodable", "only_first_sync", "containers_agree", "recon_exact",
+      )}
     FROM p
     """,
 )
@@ -3688,13 +3490,8 @@ def video_reflist_mmco(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < REFLIST_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -3715,129 +3512,110 @@ def video_reflist_mmco(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_pps,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 6 + dg[2] % 2
-                qp = 20 + dg[3] % 18
-                dx, dy = 1 + dg[4] % 3, 1 + dg[5] % 3
-                variant = (
-                    "reflist", "poc1", "longterm", "mmco5"
-                )[mid % 4]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                frames = [
-                    np.roll(
-                        base, shift=(i * dy, i * dx), axis=(0, 1)
-                    ).tobytes()
-                    for i in range(n_frames)
-                ]
-                kw = {
-                    "reflist": {"n_refs": 3, "reflist": True},
-                    "poc1": {"poc_type": 1},
-                    "longterm": {"longterm": True},
-                    "mmco5": {"mmco5": True},
-                }[variant]
-                sps, pps, nals, recon = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True, **kw
-                )
-                # parse-check: count headers that REALLY carry RPLM /
-                # MMCO syntax, and confirm the signalled poc_type
-                sd = _parse_sps_slice_fields(sps)
-                pd_ = parse_pps(pps)
-                n_rplm = n_mmco = uses_lt = 0
-                for nal in nals[1:]:
-                    rr = _BitReader(_unescape_rbsp(nal[1:]))
-                    _s, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, sd, pd_, idr=False, nal_ref_idc=nal[0] >> 5
-                    )
-                    if info["rplm_l0"]:
-                        n_rplm += 1
-                    if info["mmco"]:
-                        n_mmco += 1
-                        if any(op[0] == 3 for op in info["mmco"]):
-                            uses_lt = 1
-                gop = {
-                    "reflist": "ippp-reflist",
-                    "poc1": "ippp-poc1",
-                    "longterm": "ippp-longterm",
-                    "mmco5": "ippp-mmco5",
-                }[variant]
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop=gop
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop=gop
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    _dw, _dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and bool(sync[0])
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "variant": variant,
-                        "width": w,
-                        "height": h,
-                        "n_frames": n_frames,
-                        "n_rplm": n_rplm,
-                        "n_mmco": n_mmco,
-                        "poc_type": sd["poc_type"],
-                        "uses_longterm": uses_lt,
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "variant", "width",
-                    "height", "n_frames", "n_rplm", "n_mmco",
-                    "poc_type", "uses_longterm", "decodable",
-                    "only_first_sync", "containers_agree",
-                    "recon_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(REFLIST_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, variant string, "
-            "width int, height int, n_frames int, n_rplm int, "
-            "n_mmco int, poc_type int, uses_longterm int, "
-            "decodable int, only_first_sync int, containers_agree "
-            "int, recon_exact int",
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (16 + dg[0] % 13)
+        h = 2 * (16 + dg[1] % 9)
+        n_frames = 6 + dg[2] % 2
+        qp = 20 + dg[3] % 18
+        dx, dy = 1 + dg[4] % 3, 1 + dg[5] % 3
+        variant = (
+            "reflist", "poc1", "longterm", "mmco5"
+        )[mid % 4]
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
         )
+        base = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        frames = [
+            np.roll(
+                base, shift=(i * dy, i * dx), axis=(0, 1)
+            ).tobytes()
+            for i in range(n_frames)
+        ]
+        kw = {
+            "reflist": {"n_refs": 3, "reflist": True},
+            "poc1": {"poc_type": 1},
+            "longterm": {"longterm": True},
+            "mmco5": {"mmco5": True},
+        }[variant]
+        sps, pps, nals, recon = encode_h264_ippp(
+            w, h, frames, qp=qp, return_recon=True, **kw
+        )
+        # parse-check: count headers that REALLY carry RPLM /
+        # MMCO syntax, and confirm the signalled poc_type
+        sd = _parse_sps_slice_fields(sps)
+        pd_ = parse_pps(pps)
+        n_rplm = n_mmco = uses_lt = 0
+        for nal in nals[1:]:
+            rr = _BitReader(_unescape_rbsp(nal[1:]))
+            _s, _q, _d, _a, _b2, info = _parse_slice_header(
+                rr, sd, pd_, idr=False, nal_ref_idc=nal[0] >> 5
+            )
+            if info["rplm_l0"]:
+                n_rplm += 1
+            if info["mmco"]:
+                n_mmco += 1
+                if any(op[0] == 3 for op in info["mmco"]):
+                    uses_lt = 1
+        gop = {
+            "reflist": "ippp-reflist",
+            "poc1": "ippp-poc1",
+            "longterm": "ippp-longterm",
+            "mmco5": "ippp-mmco5",
+        }[variant]
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop=gop
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop=gop
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            _dw, _dh, _durs, out, sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            out, sync = [], []
+            decodable = 0
+        only_first_sync = int(
+            len(sync) == n_frames
+            and bool(sync[0])
+            and not any(sync[1:])
+        )
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        recon_exact = int(out == recon)
+        return {
+            "media_id": mid,
+            "container": container,
+            "variant": variant,
+            "width": w,
+            "height": h,
+            "n_frames": n_frames,
+            "n_rplm": n_rplm,
+            "n_mmco": n_mmco,
+            "poc_type": sd["poc_type"],
+            "uses_longterm": uses_lt,
+            "decodable": decodable,
+            "only_first_sync": only_first_sync,
+            "containers_agree": agree,
+            "recon_exact": recon_exact,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, REFLIST_DOCS,
+        "media_id bigint, container string, variant string, "
+        "width int, height int, n_frames int, n_rplm int, "
+        "n_mmco int, poc_type int, uses_longterm int, "
+        "decodable int, only_first_sync int, containers_agree "
+        "int, recon_exact int",
+        build_and_decode,
     )
 
 
@@ -3847,14 +3625,11 @@ BLT_DOCS = 8  # bounded: one ~10-frame IPB encode + 5 decodes per doc
 @query(
     "video_blongterm",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {BLT_DOCS}
-    ), s AS (
+    WITH {_base_sql(BLT_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3
       FROM base
     )
     SELECT media_id,
@@ -3864,17 +3639,11 @@ BLT_DOCS = 8  # bounded: one ~10-frame IPB encode + 5 decodes per doc
       CAST(9 + s2 % 2 AS INT) AS n_frames,
       CAST(20 + s3 % 14 AS INT) AS qp,
       CAST(4 AS INT) AS n_b,
-      CAST(1 AS INT) AS b_plain,
-      CAST(1 AS INT) AS b_temporal,
-      CAST(1 AS INT) AS b_lt_l0,
-      CAST(1 AS INT) AS b_lt_l1,
-      CAST(1 AS INT) AS mmco46,
-      CAST(1 AS INT) AS lt_colzero_matters,
-      CAST(1 AS INT) AS lt_unscaled_matters,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact
+      {_flags_sql(
+          "b_plain", "b_temporal", "b_lt_l0", "b_lt_l1", "mmco46",
+          "lt_colzero_matters", "lt_unscaled_matters", "decodable",
+          "only_first_sync", "containers_agree", "recon_exact",
+      )}
     FROM s
     """,
 )
@@ -3910,13 +3679,8 @@ def video_blongterm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < BLT_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -3950,140 +3714,120 @@ def video_blongterm(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 setattr(H, fname, orig)
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 80 + 16 * (dg[0] % 2)
-                h = 48
-                n_frames = 9 + dg[2] % 2
-                qp = 20 + dg[3] % 14
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                bg = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                mover = rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
-                flip = rng.integers(0, 256, (24, 32, 3), dtype=np.uint8)
-                frames = []
-                for i in range(n_frames):
-                    f = bg.copy()
-                    mx = 4 + (0 if i <= 1 else 2 * (i - 1))
-                    my = 8 + (0 if i <= 1 else (i - 1))
-                    f[my : my + 32, mx : mx + 32] = mover
-                    if i >= 1:
-                        fx = (w - 32) - 3 * ((i - 1) // 2)
-                        f[24:48, fx : fx + 32] = flip
-                    frames.append(f.tobytes())
-                sps, pps, nals, recon = H.encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    longterm=True,
-                )
-                # parse-check: each B shape really rides the headers
-                sd = H._parse_sps_slice_fields(sps)
-                pd_ = H.parse_pps(pps)
-                n_b = b_plain = b_temporal = b_lt_l0 = b_lt_l1 = 0
-                mmco46 = 0
-                for nal in nals[1:]:
-                    rr = H._BitReader(_unescape_rbsp(nal[1:]))
-                    stype, _q, _d, _a, _b2, info = H._parse_slice_header(
-                        rr, sd, pd_, idr=False, nal_ref_idc=nal[0] >> 5
-                    )
-                    if stype == "P":
-                        mm = info.get("mmco") or []
-                        if any(op[0] == 4 for op in mm) and any(
-                            op[0] == 6 for op in mm
-                        ):
-                            mmco46 += 1
-                        continue
-                    n_b += 1
-                    r0, r1 = info["rplm_l0"], info["rplm_l1"]
-                    if not info["direct_spatial"]:
-                        b_temporal += 1
-                    elif r0 and r0[0][0] == 2:
-                        b_lt_l0 += 1
-                    elif r1 and r1[0][0] == 2:
-                        b_lt_l1 += 1
-                    elif not r0 and not r1:
-                        b_plain += 1
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-longterm"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-longterm"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    _dw, _dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and bool(sync[0])
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    agree = int(
-                        other(mkv if container == "mp4" else mp4)[3]
-                        == out
-                        and len(out) == n_frames
-                    )
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                cz = flipped("_b_direct_spatial", "l1_lts", dec, payload)
-                un = flipped("_b_direct_temporal", "l0_lts", dec, payload)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": w,
-                        "height": h,
-                        "n_frames": n_frames,
-                        "qp": qp,
-                        "n_b": n_b,
-                        "b_plain": min(b_plain, 1),
-                        "b_temporal": min(b_temporal, 1),
-                        "b_lt_l0": min(b_lt_l0, 1),
-                        "b_lt_l1": min(b_lt_l1, 1),
-                        "mmco46": mmco46,
-                        "lt_colzero_matters": int(cz != recon),
-                        "lt_unscaled_matters": int(un != recon),
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "n_b", "b_plain", "b_temporal",
-                    "b_lt_l0", "b_lt_l1", "mmco46",
-                    "lt_colzero_matters", "lt_unscaled_matters",
-                    "decodable", "only_first_sync",
-                    "containers_agree", "recon_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(BLT_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, "
-            "height int, n_frames int, qp int, n_b int, b_plain int, "
-            "b_temporal int, b_lt_l0 int, b_lt_l1 int, mmco46 int, "
-            "lt_colzero_matters int, lt_unscaled_matters int, "
-            "decodable int, only_first_sync int, containers_agree "
-            "int, recon_exact int",
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 80 + 16 * (dg[0] % 2)
+        h = 48
+        n_frames = 9 + dg[2] % 2
+        qp = 20 + dg[3] % 14
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
         )
+        bg = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        mover = rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
+        flip = rng.integers(0, 256, (24, 32, 3), dtype=np.uint8)
+        frames = []
+        for i in range(n_frames):
+            f = bg.copy()
+            mx = 4 + (0 if i <= 1 else 2 * (i - 1))
+            my = 8 + (0 if i <= 1 else (i - 1))
+            f[my : my + 32, mx : mx + 32] = mover
+            if i >= 1:
+                fx = (w - 32) - 3 * ((i - 1) // 2)
+                f[24:48, fx : fx + 32] = flip
+            frames.append(f.tobytes())
+        sps, pps, nals, recon = H.encode_h264_ipb(
+            w, h, frames, qp=qp, return_recon=True,
+            longterm=True,
+        )
+        # parse-check: each B shape really rides the headers
+        sd = H._parse_sps_slice_fields(sps)
+        pd_ = H.parse_pps(pps)
+        n_b = b_plain = b_temporal = b_lt_l0 = b_lt_l1 = 0
+        mmco46 = 0
+        for nal in nals[1:]:
+            rr = H._BitReader(_unescape_rbsp(nal[1:]))
+            stype, _q, _d, _a, _b2, info = H._parse_slice_header(
+                rr, sd, pd_, idr=False, nal_ref_idc=nal[0] >> 5
+            )
+            if stype == "P":
+                mm = info.get("mmco") or []
+                if any(op[0] == 4 for op in mm) and any(
+                    op[0] == 6 for op in mm
+                ):
+                    mmco46 += 1
+                continue
+            n_b += 1
+            r0, r1 = info["rplm_l0"], info["rplm_l1"]
+            if not info["direct_spatial"]:
+                b_temporal += 1
+            elif r0 and r0[0][0] == 2:
+                b_lt_l0 += 1
+            elif r1 and r1[0][0] == 2:
+                b_lt_l1 += 1
+            elif not r0 and not r1:
+                b_plain += 1
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-longterm"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-longterm"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            _dw, _dh, _durs, out, sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            out, sync = [], []
+            decodable = 0
+        only_first_sync = int(
+            len(sync) == n_frames
+            and bool(sync[0])
+            and not any(sync[1:])
+        )
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            agree = int(
+                other(mkv if container == "mp4" else mp4)[3]
+                == out
+                and len(out) == n_frames
+            )
+        except MediaFormatError:
+            agree = 0
+        recon_exact = int(out == recon)
+        cz = flipped("_b_direct_spatial", "l1_lts", dec, payload)
+        un = flipped("_b_direct_temporal", "l0_lts", dec, payload)
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": w,
+            "height": h,
+            "n_frames": n_frames,
+            "qp": qp,
+            "n_b": n_b,
+            "b_plain": min(b_plain, 1),
+            "b_temporal": min(b_temporal, 1),
+            "b_lt_l0": min(b_lt_l0, 1),
+            "b_lt_l1": min(b_lt_l1, 1),
+            "mmco46": mmco46,
+            "lt_colzero_matters": int(cz != recon),
+            "lt_unscaled_matters": int(un != recon),
+            "decodable": decodable,
+            "only_first_sync": only_first_sync,
+            "containers_agree": agree,
+            "recon_exact": recon_exact,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, BLT_DOCS,
+        "media_id bigint, container string, width int, "
+        "height int, n_frames int, qp int, n_b int, b_plain int, "
+        "b_temporal int, b_lt_l0 int, b_lt_l1 int, mmco46 int, "
+        "lt_colzero_matters int, lt_unscaled_matters int, "
+        "decodable int, only_first_sync int, containers_agree "
+        "int, recon_exact int",
+        build_and_decode,
     )
 
 
@@ -4093,15 +3837,12 @@ WPMS_DOCS = 10  # bounded: three encode chains per doc
 @query(
     "video_wp_multislice",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {WPMS_DOCS}
-    ), s AS (
+    WITH {_base_sql(WPMS_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3
       FROM base
     )
     SELECT media_id,
@@ -4110,12 +3851,10 @@ WPMS_DOCS = 10  # bounded: three encode chains per doc
       CAST(2 * (16 + s1 % 9) AS INT) AS height,
       CAST(4 + s2 % 3 AS INT) AS n_frames,
       CAST(20 + s3 % 18 AS INT) AS qp,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS wp_smaller,
-      CAST(1 AS INT) AS wp_recon_exact,
-      CAST(1 AS INT) AS ms_recon_exact,
-      CAST(1 AS INT) AS ms_differs,
-      CAST(1 AS INT) AS containers_agree
+      {_flags_sql(
+          "decodable", "wp_smaller", "wp_recon_exact", "ms_recon_exact",
+          "ms_differs", "containers_agree",
+      )}
     FROM s
     """,
 )
@@ -4144,13 +3883,8 @@ def video_wp_multislice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < WPMS_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -4168,116 +3902,98 @@ def video_wp_multislice(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_h264_multislice,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 4 + dg[2] % 3
-                qp = 20 + dg[3] % 18
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(30, 226, (h, w, 3)).astype(
-                    np.float64
-                )
-                frames = [
-                    np.clip(base * (1.0 - 0.11 * i) + 5 * i, 0, 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for i in range(n_frames)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                # --- weighted chain through its container
-                _s, _p, wp_nals, wp_rec = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True,
-                    weighted=True,
-                )
-                _s, _p, pl_nals = encode_h264_ippp(
-                    w, h, frames, qp=qp
-                )
-                wp_smaller = int(
-                    sum(len(x) for x in wp_nals)
-                    < sum(len(x) for x in pl_nals)
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-wp"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-wp"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                wp_recon_exact = int(out == wp_rec)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                # --- two-slice chain through the annex-b walk
-                msps, mpps, pics, ms_rec = encode_h264_multislice(
-                    w, h, frames, qp=qp, n_slices=2, return_recon=True
-                )
-                flat = [x for p in pics for x in p]
-                try:
-                    _mw, _mh, ms_out = decode_h264_stream(
-                        msps, mpps, flat
-                    )
-                    ms_recon_exact = int(ms_out == ms_rec)
-                except MediaFormatError:
-                    ms_recon_exact = 0
-                _s, _p, _n, ss_rec = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                ms_differs = int(ms_rec != ss_rec)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "decodable": decodable,
-                        "wp_smaller": wp_smaller,
-                        "wp_recon_exact": wp_recon_exact,
-                        "ms_recon_exact": ms_recon_exact,
-                        "ms_differs": ms_differs,
-                        "containers_agree": agree,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "decodable", "wp_smaller",
-                    "wp_recon_exact", "ms_recon_exact", "ms_differs",
-                    "containers_agree",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(WPMS_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, qp int, decodable int, wp_smaller int, "
-            "wp_recon_exact int, ms_recon_exact int, ms_differs int, "
-            "containers_agree int",
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (16 + dg[0] % 13)
+        h = 2 * (16 + dg[1] % 9)
+        n_frames = 4 + dg[2] % 3
+        qp = 20 + dg[3] % 18
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
         )
+        base = rng.integers(30, 226, (h, w, 3)).astype(
+            np.float64
+        )
+        frames = [
+            np.clip(base * (1.0 - 0.11 * i) + 5 * i, 0, 255)
+            .astype(np.uint8)
+            .tobytes()
+            for i in range(n_frames)
+        ]
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        # --- weighted chain through its container
+        _s, _p, wp_nals, wp_rec = encode_h264_ippp(
+            w, h, frames, qp=qp, return_recon=True,
+            weighted=True,
+        )
+        _s, _p, pl_nals = encode_h264_ippp(
+            w, h, frames, qp=qp
+        )
+        wp_smaller = int(
+            sum(len(x) for x in wp_nals)
+            < sum(len(x) for x in pl_nals)
+        )
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp-wp"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp-wp"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, _sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out = []
+            decodable = 0
+        wp_recon_exact = int(out == wp_rec)
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        # --- two-slice chain through the annex-b walk
+        msps, mpps, pics, ms_rec = encode_h264_multislice(
+            w, h, frames, qp=qp, n_slices=2, return_recon=True
+        )
+        flat = [x for p in pics for x in p]
+        try:
+            _mw, _mh, ms_out = decode_h264_stream(
+                msps, mpps, flat
+            )
+            ms_recon_exact = int(ms_out == ms_rec)
+        except MediaFormatError:
+            ms_recon_exact = 0
+        _s, _p, _n, ss_rec = encode_h264_ippp(
+            w, h, frames, qp=qp, return_recon=True
+        )
+        ms_differs = int(ms_rec != ss_rec)
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "qp": qp,
+            "decodable": decodable,
+            "wp_smaller": wp_smaller,
+            "wp_recon_exact": wp_recon_exact,
+            "ms_recon_exact": ms_recon_exact,
+            "ms_differs": ms_differs,
+            "containers_agree": agree,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, WPMS_DOCS,
+        "media_id bigint, container string, width int, height int, "
+        "n_frames int, qp int, decodable int, wp_smaller int, "
+        "wp_recon_exact int, ms_recon_exact int, ms_differs int, "
+        "containers_agree int",
+        build_and_decode,
     )
 
 
@@ -4287,15 +4003,12 @@ BWP_DOCS = 10  # bounded: two IPB encode chains per doc
 @query(
     "video_bweighted",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {BWP_DOCS}
-    ), s AS (
+    WITH {_base_sql(BWP_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3
       FROM base
     )
     SELECT media_id,
@@ -4305,11 +4018,10 @@ BWP_DOCS = 10  # bounded: two IPB encode chains per doc
       CAST(5 + s2 % 2 AS INT) AS n_frames,
       CAST(20 + s3 % 16 AS INT) AS qp,
       CAST((5 + s2 % 2 - 1) // 2 AS INT) AS n_b,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS wpb_nonidentity,
-      CAST(1 AS INT) AS bwp_smaller,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS containers_agree
+      {_flags_sql(
+          "decodable", "wpb_nonidentity", "bwp_smaller", "recon_exact",
+          "containers_agree",
+      )}
     FROM s
     """,
 )
@@ -4337,13 +4049,8 @@ def video_bweighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < BWP_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -4364,126 +4071,108 @@ def video_bweighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_pps,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 5 + dg[2] % 2
-                qp = 20 + dg[3] % 16
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(30, 226, (h, w, 3)).astype(
-                    np.float64
-                )
-                frames = [
-                    np.clip(base * (1.0 - 0.11 * i) + 5 * i, 0, 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for i in range(n_frames)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                sps, pps, wn, wrec = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    weighted=True,
-                )
-                _s, _p, pn = encode_h264_ipb(w, h, frames, qp=qp)
-                n_b = sum(1 for n in wn if (n[0] >> 5) == 0)
-                p_identical = all(
-                    a == b
-                    for a, b in zip(wn, pn)
-                    if (a[0] >> 5) != 0
-                )
-                bwp_smaller = int(
-                    p_identical
-                    and sum(len(x) for x in wn)
-                    < sum(len(x) for x in pn)
-                )
-                # parse the first B header back: non-identity weights
-                wpb_ni = 0
-                try:
-                    b_nal = next(n for n in wn if (n[0] >> 5) == 0)
-                    rr = _BitReader(_unescape_rbsp(b_nal[1:]))
-                    _st, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, _parse_sps_slice_fields(sps),
-                        parse_pps(pps), idr=False, nal_ref_idc=0,
-                    )
-                    wpb = info.get("wpb") or {}
-                    ident = {"lw": 32, "lo": 0}
-                    wpb_ni = int(
-                        all(
-                            e is not None
-                            and (e["lw"], e["lo"])
-                            != (ident["lw"], ident["lo"])
-                            for e in (wpb.get("w0", [None])[0],
-                                      wpb.get("w1", [None])[0])
-                        )
-                    )
-                except MediaFormatError:
-                    wpb_ni = 0
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wp"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wp"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                recon_exact = int(out == wrec and len(out) == n_frames)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2)
-                except MediaFormatError:
-                    agree = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "n_b": n_b,
-                        "decodable": decodable,
-                        "wpb_nonidentity": wpb_ni,
-                        "bwp_smaller": bwp_smaller,
-                        "recon_exact": recon_exact,
-                        "containers_agree": agree,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "n_b", "decodable",
-                    "wpb_nonidentity", "bwp_smaller", "recon_exact",
-                    "containers_agree",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(BWP_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, qp int, n_b int, decodable int, "
-            "wpb_nonidentity int, bwp_smaller int, recon_exact int, "
-            "containers_agree int",
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (16 + dg[0] % 13)
+        h = 2 * (16 + dg[1] % 9)
+        n_frames = 5 + dg[2] % 2
+        qp = 20 + dg[3] % 16
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
         )
+        base = rng.integers(30, 226, (h, w, 3)).astype(
+            np.float64
+        )
+        frames = [
+            np.clip(base * (1.0 - 0.11 * i) + 5 * i, 0, 255)
+            .astype(np.uint8)
+            .tobytes()
+            for i in range(n_frames)
+        ]
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        sps, pps, wn, wrec = encode_h264_ipb(
+            w, h, frames, qp=qp, return_recon=True,
+            weighted=True,
+        )
+        _s, _p, pn = encode_h264_ipb(w, h, frames, qp=qp)
+        n_b = sum(1 for n in wn if (n[0] >> 5) == 0)
+        p_identical = all(
+            a == b
+            for a, b in zip(wn, pn)
+            if (a[0] >> 5) != 0
+        )
+        bwp_smaller = int(
+            p_identical
+            and sum(len(x) for x in wn)
+            < sum(len(x) for x in pn)
+        )
+        # parse the first B header back: non-identity weights
+        wpb_ni = 0
+        try:
+            b_nal = next(n for n in wn if (n[0] >> 5) == 0)
+            rr = _BitReader(_unescape_rbsp(b_nal[1:]))
+            _st, _q, _d, _a, _b2, info = _parse_slice_header(
+                rr, _parse_sps_slice_fields(sps),
+                parse_pps(pps), idr=False, nal_ref_idc=0,
+            )
+            wpb = info.get("wpb") or {}
+            ident = {"lw": 32, "lo": 0}
+            wpb_ni = int(
+                all(
+                    e is not None
+                    and (e["lw"], e["lo"])
+                    != (ident["lw"], ident["lo"])
+                    for e in (wpb.get("w0", [None])[0],
+                              wpb.get("w1", [None])[0])
+                )
+            )
+        except MediaFormatError:
+            wpb_ni = 0
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-wp"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-wp"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, _sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out = []
+            decodable = 0
+        recon_exact = int(out == wrec and len(out) == n_frames)
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2)
+        except MediaFormatError:
+            agree = 0
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "qp": qp,
+            "n_b": n_b,
+            "decodable": decodable,
+            "wpb_nonidentity": wpb_ni,
+            "bwp_smaller": bwp_smaller,
+            "recon_exact": recon_exact,
+            "containers_agree": agree,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, BWP_DOCS,
+        "media_id bigint, container string, width int, height int, "
+        "n_frames int, qp int, n_b int, decodable int, "
+        "wpb_nonidentity int, bwp_smaller int, recon_exact int, "
+        "containers_agree int",
+        build_and_decode,
     )
 
 
@@ -4493,14 +4182,11 @@ CABAC_DOCS = 10  # bounded: ME + a pure-Python arithmetic coder per doc
 @query(
     "video_cabac_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {CABAC_DOCS}
-    ), s AS (
+    WITH {_base_sql(CABAC_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -4510,10 +4196,10 @@ CABAC_DOCS = 10  # bounded: ME + a pure-Python arithmetic coder per doc
       CAST(3 + s2 % 3 AS INT) AS n_frames,
       CAST(1 AS INT) AS decodable,
       CAST(77 AS INT) AS profile_idc,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS markerless_quarantined
+      {_flags_sql(
+          "only_first_sync", "containers_agree", "recon_exact",
+          "markerless_quarantined",
+      )}
     FROM s
     """,
 )
@@ -4540,13 +4226,8 @@ def video_cabac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other video lanes — Arrow-batched
     mapInPandas, payloads never shuffle."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < CABAC_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         from reindexer_spark.codecs import (
             MediaFormatError,
             decode_mkv,
@@ -4562,95 +4243,81 @@ def video_cabac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.h264_cabac import encode_h264_ippp_cabac
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                _s, _p, _nals, recon = encode_h264_ippp_cabac(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp",
-                    entropy="cabac",
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp",
-                    entropy="cabac",
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out, sync = [], []
-                    decodable = 0
-                profile = int(probe_media(payload).get("profile") or 0)
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and sync[0]
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                # the provenance contract: same bitstream, marker SEI
-                # stripped, must refuse to decode
-                avcc, samples = encode_avcc_samples(
-                    w, h, frames, qp, gop="ippp", entropy="cabac"
-                )
-                nals0 = split_sample_nals(samples[0], 4)
-                stripped = b"".join(
-                    len(n).to_bytes(4, "big") + n
-                    for n in nals0
-                    if (n[0] & 0x1F) != 6
-                )
-                try:
-                    decode_avcc_samples(avcc, [stripped] + samples[1:])
-                    quarantined = 0
-                except MediaFormatError:
-                    quarantined = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "decodable": decodable,
-                        "profile_idc": profile,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                        "markerless_quarantined": quarantined,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height", "n_frames",
-                    "decodable", "profile_idc", "only_first_sync",
-                    "containers_agree", "recon_exact",
-                    "markerless_quarantined",
-                ],
+        w, h, n_frames, qp, frames, container = _inter_fixture(
+            mid, text
+        )
+        _s, _p, _nals, recon = encode_h264_ippp_cabac(
+            w, h, frames, qp=qp, return_recon=True
+        )
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp",
+            entropy="cabac",
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp",
+            entropy="cabac",
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out, sync = [], []
+            decodable = 0
+        profile = int(probe_media(payload).get("profile") or 0)
+        only_first_sync = int(
+            len(sync) == n_frames
+            and sync[0]
+            and not any(sync[1:])
+        )
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
             )
+            agree = int(out == out2 and len(out) == n_frames)
+        except MediaFormatError:
+            agree = 0
+        recon_exact = int(out == recon)
+        # the provenance contract: same bitstream, marker SEI
+        # stripped, must refuse to decode
+        avcc, samples = encode_avcc_samples(
+            w, h, frames, qp, gop="ippp", entropy="cabac"
+        )
+        nals0 = split_sample_nals(samples[0], 4)
+        stripped = b"".join(
+            len(n).to_bytes(4, "big") + n
+            for n in nals0
+            if (n[0] & 0x1F) != 6
+        )
+        try:
+            decode_avcc_samples(avcc, [stripped] + samples[1:])
+            quarantined = 0
+        except MediaFormatError:
+            quarantined = 1
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "decodable": decodable,
+            "profile_idc": profile,
+            "only_first_sync": only_first_sync,
+            "containers_agree": agree,
+            "recon_exact": recon_exact,
+            "markerless_quarantined": quarantined,
+        }
 
-    return docs.select("doc_id", "text").repartition(CABAC_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, CABAC_DOCS,
         "media_id bigint, container string, width int, height int, "
         "n_frames int, decodable int, profile_idc int, "
         "only_first_sync int, containers_agree int, recon_exact int, "
         "markerless_quarantined int",
+        build_and_decode,
     )
 
 
@@ -4660,13 +4327,10 @@ WEBP_DOCS = 24
 @query(
     "webp_lossless_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {WEBP_DOCS}
-    ), dims AS (
+    WITH {_base_sql(WEBP_DOCS)}, dims AS (
       SELECT media_id, dg,
-             4 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 13 AS w,
-             4 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 9 AS h
+             4 + {_dg_byte(0)} % 13 AS w,
+             4 + {_dg_byte(1)} % 9 AS h
       FROM base
     ), chain AS (
       SELECT media_id, w, h,
@@ -4683,8 +4347,7 @@ WEBP_DOCS = 24
            CAST(h AS INT) AS height,
            CAST(media_id % 2 AS INT) AS subtract_green,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS lossy_quarantined
+           {_flags_sql("roundtrip_exact", "lossy_quarantined")}
     FROM chain
     """,
 )
@@ -4707,13 +4370,8 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < WEBP_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -4723,55 +4381,39 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.vp8l import encode_webp_lossless
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 4 + int(dg[0:2], 16) % 13
-                h = 4 + int(dg[2:4], 16) % 9
-                n = w * h * 3
-                hexchain = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                rgb = bytes.fromhex(hexchain)
-                payload = encode_webp_lossless(
-                    w, h, rgb, subtract_green=bool(mid % 2)
-                )
-                dw, dh, out = _decode_image("webp", payload)
-                try:
-                    _decode_image(
-                        "webp", encode_webp_fixture(8, 8, "vp8")
-                    )
-                    lossy_q = 0
-                except MediaFormatError:
-                    lossy_q = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "subtract_green": mid % 2,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": int(out == rgb),
-                        "lossy_quarantined": lossy_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "subtract_green",
-                    "rgb_md5", "roundtrip_exact", "lossy_quarantined",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 4 + int(dg[0:2], 16) % 13
+        h = 4 + int(dg[2:4], 16) % 9
+        n = w * h * 3
+        rgb = _hex_chain(dg, n)
+        payload = encode_webp_lossless(
+            w, h, rgb, subtract_green=bool(mid % 2)
+        )
+        dw, dh, out = _decode_image("webp", payload)
+        try:
+            _decode_image(
+                "webp", encode_webp_fixture(8, 8, "vp8")
             )
+            lossy_q = 0
+        except MediaFormatError:
+            lossy_q = 1
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "subtract_green": mid % 2,
+            "rgb_md5": hashlib.md5(
+                out.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": int(out == rgb),
+            "lossy_quarantined": lossy_q,
+        }
 
-    return docs.select("doc_id", "text").repartition(WEBP_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, WEBP_DOCS,
         "media_id bigint, width int, height int, subtract_green int, "
         "rgb_md5 string, roundtrip_exact int, lossy_quarantined int",
+        build_and_decode,
     )
 
 
@@ -4781,14 +4423,11 @@ WEBP_LOSSY_DOCS = 20
 @query(
     "webp_lossy_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {WEBP_LOSSY_DOCS}
-    ), s AS (
+    WITH {_base_sql(WEBP_LOSSY_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -4797,9 +4436,7 @@ WEBP_LOSSY_DOCS = 20
       CAST(8 + s2 % 96 AS INT) AS qi,
       CASE WHEN media_id % 2 = 0 THEN 'simple' ELSE 'normal' END
         AS filter_type,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS probe_ok,
-      CAST(1 AS INT) AS markerless_quarantined
+      {_flags_sql("recon_exact", "probe_ok", "markerless_quarantined")}
     FROM s
     """,
 )
@@ -4830,13 +4467,8 @@ def webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched mapInPandas, payloads never shuffle —
     same as every media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < WEBP_LOSSY_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
         import struct
 
@@ -4847,76 +4479,56 @@ def webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.vp8 import encode_webp_lossy
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 4 + int(dg[0:2], 16) % 21
-                h = 4 + int(dg[2:4], 16) % 15
-                qi = 8 + int(dg[4:6], 16) % 96
-                ft = "simple" if mid % 2 == 0 else "normal"
-                n = w * h * 3
-                hexchain = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                rgb = bytes.fromhex(hexchain)
-                webp, recon = encode_webp_lossy(w, h, rgb, qi, ft)
-                dw, dh, out = _decode_image("webp", webp)
-                meta = probe_media(webp)
-                probe_ok = int(
-                    meta.get("width") == w and meta.get("height") == h
-                )
-                # strip the PRVN chunk and require the quarantine
-                pos, keep = 12, b""
-                while pos + 8 <= len(webp):
-                    cid = webp[pos : pos + 4]
-                    size = struct.unpack_from("<I", webp, pos + 4)[0]
-                    end = pos + 8 + size + (size & 1)
-                    if cid != b"PRVN":
-                        keep += webp[pos:end]
-                    pos = end
-                stripped = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + len(keep))
-                    + b"WEBP"
-                    + keep
-                )
-                try:
-                    _decode_image("webp", stripped)
-                    quarantined = 0
-                except MediaFormatError:
-                    quarantined = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw if dw == w else -dw,
-                        "height": dh if dh == h else -dh,
-                        "qi": qi,
-                        "filter_type": ft,
-                        "recon_exact": int(out == recon),
-                        "probe_ok": probe_ok,
-                        "markerless_quarantined": quarantined,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "qi", "filter_type",
-                    "recon_exact", "probe_ok", "markerless_quarantined",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(WEBP_LOSSY_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, width int, height int, qi int, "
-            "filter_type string, recon_exact int, probe_ok int, "
-            "markerless_quarantined int",
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 4 + int(dg[0:2], 16) % 21
+        h = 4 + int(dg[2:4], 16) % 15
+        qi = 8 + int(dg[4:6], 16) % 96
+        ft = "simple" if mid % 2 == 0 else "normal"
+        n = w * h * 3
+        rgb = _hex_chain(dg, n)
+        webp, recon = encode_webp_lossy(w, h, rgb, qi, ft)
+        dw, dh, out = _decode_image("webp", webp)
+        meta = probe_media(webp)
+        probe_ok = int(
+            meta.get("width") == w and meta.get("height") == h
         )
+        # strip the PRVN chunk and require the quarantine
+        pos, keep = 12, b""
+        while pos + 8 <= len(webp):
+            cid = webp[pos : pos + 4]
+            size = struct.unpack_from("<I", webp, pos + 4)[0]
+            end = pos + 8 + size + (size & 1)
+            if cid != b"PRVN":
+                keep += webp[pos:end]
+            pos = end
+        stripped = (
+            b"RIFF"
+            + struct.pack("<I", 4 + len(keep))
+            + b"WEBP"
+            + keep
+        )
+        try:
+            _decode_image("webp", stripped)
+            quarantined = 0
+        except MediaFormatError:
+            quarantined = 1
+        return {
+            "media_id": mid,
+            "width": dw if dw == w else -dw,
+            "height": dh if dh == h else -dh,
+            "qi": qi,
+            "filter_type": ft,
+            "recon_exact": int(out == recon),
+            "probe_ok": probe_ok,
+            "markerless_quarantined": quarantined,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, WEBP_LOSSY_DOCS,
+        "media_id bigint, width int, height int, qi int, "
+        "filter_type string, recon_exact int, probe_ok int, "
+        "markerless_quarantined int",
+        build_and_decode,
     )
 
 
@@ -4926,13 +4538,10 @@ TIFF_DOCS = 20
 @query(
     "image_tiff_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
+    WITH {_base_sql(TIFF_DOCS)}, dims AS (
       SELECT media_id, dg,
-             4 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 13 AS w,
-             4 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 9 AS h,
+             4 + {_dg_byte(0)} % 13 AS w,
+             4 + {_dg_byte(1)} % 9 AS h,
              CASE WHEN media_id % 3 = 0 THEN 1 ELSE 0 END AS gray
       FROM base
     ), chain AS (
@@ -4971,9 +4580,7 @@ TIFF_DOCS = 20
                 AS INT) AS predictor,
            CAST(2 AS INT) AS n_strips,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS ccitt_quarantined
+           {_flags_sql("roundtrip_exact", "probe_agrees", "ccitt_quarantined")}
     FROM px
     """,
 )
@@ -5001,15 +4608,9 @@ def image_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         from reindexer_spark.codecs import (
             MediaFormatError,
@@ -5018,108 +4619,74 @@ def image_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.tiff import TAG_COMPRESSION, encode_tiff
 
-        def with_ccitt_tag(payload: bytes) -> bytes:
-            le = payload[:2] == b"II"
-            f = "<" if le else ">"
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from(f + "I", buf, 4)
-            (n,) = st.unpack_from(f + "H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from(f + "H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into(f + "H", buf, e + 8, 2)  # CCITT G3
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 4 + int(dg[0:2], 16) % 13
+        h = 4 + int(dg[2:4], 16) % 9
+        gray = mid % 3 == 0
+        le = mid % 2 == 0
+        comp, cname, pred = (
+            (1, "none", 1),
+            (5, "lzw", 2),
+            (32773, "packbits", 1),
+            (8, "deflate", 2),
+        )[mid % 4]
+        n = w * h * (1 if gray else 3)
+        src = _hex_chain(dg, n)
+        if gray:
+            rgb = b"".join(bytes((v, v, v)) for v in src)
+        else:
+            rgb = src
+        payload = encode_tiff(
+            w, h, rgb, le=le, gray=gray,
+            compression=comp, predictor=pred,
+        )
+        dw, dh, out = _decode_image("tiff", payload)
+        pm = probe_media(payload)
+        agrees = int(
+            pm["kind"] == "tiff"
+            and pm["width"] == dw
+            and pm["height"] == dh
+        )
+        ccitt = _patch_ifd_tag(payload, TAG_COMPRESSION, 2)  # CCITT G3
+        try:
+            _decode_image("tiff", ccitt)
+            ccitt_q = 0
+        except MediaFormatError:
+            ccitt_q = int(probe_media(ccitt)["width"] == dw)
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "byte_order": "II" if le else "MM",
+            "gray": int(gray),
+            "compression": cname,
+            "predictor": pred,
+            "n_strips": 2,
+            "rgb_md5": hashlib.md5(
+                out.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": int(out == rgb),
+            "probe_agrees": agrees,
+            "ccitt_quarantined": ccitt_q,
+        }
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 4 + int(dg[0:2], 16) % 13
-                h = 4 + int(dg[2:4], 16) % 9
-                gray = mid % 3 == 0
-                le = mid % 2 == 0
-                comp, cname, pred = (
-                    (1, "none", 1),
-                    (5, "lzw", 2),
-                    (32773, "packbits", 1),
-                    (8, "deflate", 2),
-                )[mid % 4]
-                n = w * h * (1 if gray else 3)
-                hexsrc = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                src = bytes.fromhex(hexsrc)
-                if gray:
-                    rgb = b"".join(bytes((v, v, v)) for v in src)
-                else:
-                    rgb = src
-                payload = encode_tiff(
-                    w, h, rgb, le=le, gray=gray,
-                    compression=comp, predictor=pred,
-                )
-                dw, dh, out = _decode_image("tiff", payload)
-                pm = probe_media(payload)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                )
-                ccitt = with_ccitt_tag(payload)
-                try:
-                    _decode_image("tiff", ccitt)
-                    ccitt_q = 0
-                except MediaFormatError:
-                    ccitt_q = int(probe_media(ccitt)["width"] == dw)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "byte_order": "II" if le else "MM",
-                        "gray": int(gray),
-                        "compression": cname,
-                        "predictor": pred,
-                        "n_strips": 2,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": int(out == rgb),
-                        "probe_agrees": agrees,
-                        "ccitt_quarantined": ccitt_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "byte_order",
-                    "gray", "compression", "predictor", "n_strips",
-                    "rgb_md5", "roundtrip_exact",
-                    "probe_agrees", "ccitt_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, byte_order string, "
         "gray int, compression string, predictor int, n_strips int, "
         "rgb_md5 string, roundtrip_exact int, "
         "probe_agrees int, ccitt_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "image_tiff_tiled",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
+    WITH {_base_sql(TIFF_DOCS)}, dims AS (
       SELECT media_id, dg,
-             17 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 32 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 24 AS h,
+             17 + {_dg_byte(0)} % 32 AS w,
+             17 + {_dg_byte(1)} % 24 AS h,
              CASE WHEN media_id % 2 = 0 THEN 16 ELSE 8 END AS bits,
              CASE WHEN media_id % 3 <> 0 THEN 1 ELSE 0 END AS le
       FROM base
@@ -5164,9 +4731,9 @@ def image_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INT) AS predictor,
            CAST(((w + 15) // 16) * ((h + 15) // 16) AS INT) AS n_tiles,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS misaligned_quarantined
+           {_flags_sql(
+               "roundtrip_exact", "probe_agrees", "misaligned_quarantined",
+           )}
     FROM px
     """,
 )
@@ -5192,15 +4759,9 @@ def image_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         import numpy as np
 
@@ -5211,113 +4772,79 @@ def image_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.tiff import TAG_TILE_WIDTH, encode_tiff
 
-        def with_misaligned_tile(payload: bytes) -> bytes:
-            le = payload[:2] == b"II"
-            f = "<" if le else ">"
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from(f + "I", buf, 4)
-            (n,) = st.unpack_from(f + "H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from(f + "H", buf, e)[0] == TAG_TILE_WIDTH:
-                    st.pack_into(f + "H", buf, e + 8, 20)  # not %16
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a TileWidth tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 17 + int(dg[0:2], 16) % 32
+        h = 17 + int(dg[2:4], 16) % 24
+        bits = 16 if mid % 2 == 0 else 8
+        le = mid % 3 != 0
+        comp, cname, pred = (
+            (1, "none", 1),
+            (5, "lzw", 2),
+            (32773, "packbits", 1),
+            (8, "deflate", 2),
+        )[mid % 4]
+        nbytes = w * h * 3 * (bits // 8)
+        src = _hex_chain(dg, nbytes)
+        if bits == 16:
+            dt = "<u2" if le else ">u2"
+            hi = (
+                np.frombuffer(src, dtype=dt).astype(np.uint16)
+                >> 8
+            ).astype(np.uint8)
+            expected = hi.tobytes()
+        else:
+            expected = src
+        payload = encode_tiff(
+            w, h, src, le=le, bits=bits,
+            compression=comp, predictor=pred, tile=(16, 16),
+        )
+        dw, dh, out = _decode_image("tiff", payload)
+        pm = probe_media(payload)
+        agrees = int(
+            pm["kind"] == "tiff"
+            and pm["width"] == dw
+            and pm["height"] == dh
+        )
+        bad = _patch_ifd_tag(payload, TAG_TILE_WIDTH, 20)  # not %16
+        try:
+            _decode_image("tiff", bad)
+            mis_q = 0
+        except MediaFormatError:
+            mis_q = int(probe_media(bad)["width"] == dw)
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "byte_order": "II" if le else "MM",
+            "bits": bits,
+            "compression": cname,
+            "predictor": pred,
+            "n_tiles": ((w + 15) // 16) * ((h + 15) // 16),
+            "rgb_md5": hashlib.md5(
+                out.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": int(out == expected),
+            "probe_agrees": agrees,
+            "misaligned_quarantined": mis_q,
+        }
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 17 + int(dg[0:2], 16) % 32
-                h = 17 + int(dg[2:4], 16) % 24
-                bits = 16 if mid % 2 == 0 else 8
-                le = mid % 3 != 0
-                comp, cname, pred = (
-                    (1, "none", 1),
-                    (5, "lzw", 2),
-                    (32773, "packbits", 1),
-                    (8, "deflate", 2),
-                )[mid % 4]
-                nbytes = w * h * 3 * (bits // 8)
-                hexsrc = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((nbytes + 31) // 32)
-                )[: 2 * nbytes]
-                src = bytes.fromhex(hexsrc)
-                if bits == 16:
-                    dt = "<u2" if le else ">u2"
-                    hi = (
-                        np.frombuffer(src, dtype=dt).astype(np.uint16)
-                        >> 8
-                    ).astype(np.uint8)
-                    expected = hi.tobytes()
-                else:
-                    expected = src
-                payload = encode_tiff(
-                    w, h, src, le=le, bits=bits,
-                    compression=comp, predictor=pred, tile=(16, 16),
-                )
-                dw, dh, out = _decode_image("tiff", payload)
-                pm = probe_media(payload)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                )
-                bad = with_misaligned_tile(payload)
-                try:
-                    _decode_image("tiff", bad)
-                    mis_q = 0
-                except MediaFormatError:
-                    mis_q = int(probe_media(bad)["width"] == dw)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "byte_order": "II" if le else "MM",
-                        "bits": bits,
-                        "compression": cname,
-                        "predictor": pred,
-                        "n_tiles": ((w + 15) // 16) * ((h + 15) // 16),
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": int(out == expected),
-                        "probe_agrees": agrees,
-                        "misaligned_quarantined": mis_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "byte_order",
-                    "bits", "compression", "predictor", "n_tiles",
-                    "rgb_md5", "roundtrip_exact",
-                    "probe_agrees", "misaligned_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, byte_order string, "
         "bits int, compression string, predictor int, n_tiles int, "
         "rgb_md5 string, roundtrip_exact int, "
         "probe_agrees int, misaligned_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "image_tiff_palette",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
+    WITH {_base_sql(TIFF_DOCS)}, dims AS (
       SELECT media_id, dg,
-             9 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 24 AS w,
-             9 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 16 AS h
+             9 + {_dg_byte(0)} % 24 AS w,
+             9 + {_dg_byte(1)} % 16 AS h
       FROM base
     ), idxc AS (
       SELECT media_id, dg, w, h,
@@ -5359,8 +4886,7 @@ def image_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
                              WHEN 2 THEN 'packbits' ELSE 'deflate' END
              AS compression,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS short_cmap_quarantined
+           {_flags_sql("probe_agrees", "short_cmap_quarantined")}
     FROM px
     """,
 )
@@ -5382,15 +4908,9 @@ def image_tiff_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         from reindexer_spark.codecs import (
             MediaFormatError,
@@ -5399,80 +4919,49 @@ def image_tiff_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.tiff import TAG_COLORMAP, encode_tiff_palette
 
-        def with_short_cmap(payload: bytes) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COLORMAP:
-                    st.pack_into("<I", buf, e + 4, 300)  # count cut
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a ColorMap tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 9 + int(dg[0:2], 16) % 24
+        h = 9 + int(dg[2:4], 16) % 16
+        comp, cname = (
+            (1, "none"), (5, "lzw"), (32773, "packbits"),
+            (8, "deflate"),
+        )[mid % 4]
+        idx = _hex_chain(dg, w * h)
+        cmbytes = _hex_chain(dg, 3 * 256, "cm-")
+        colormap = [b << 8 for b in cmbytes]
+        payload = encode_tiff_palette(
+            w, h, idx, colormap, le=True, compression=comp
+        )
+        dw, dh, out = _decode_image("tiff", payload)
+        pm = probe_media(payload)
+        agrees = int(
+            pm["kind"] == "tiff"
+            and pm["width"] == dw
+            and pm["height"] == dh
+        )
+        bad = _patch_ifd_tag(payload, TAG_COLORMAP, 300, count=True)
+        try:
+            _decode_image("tiff", bad)
+            cq = 0
+        except MediaFormatError:
+            cq = int(probe_media(bad)["width"] == dw)
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "compression": cname,
+            "rgb_md5": hashlib.md5(
+                out.hex().encode()
+            ).hexdigest(),
+            "probe_agrees": agrees,
+            "short_cmap_quarantined": cq,
+        }
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 9 + int(dg[0:2], 16) % 24
-                h = 9 + int(dg[2:4], 16) % 16
-                comp, cname = (
-                    (1, "none"), (5, "lzw"), (32773, "packbits"),
-                    (8, "deflate"),
-                )[mid % 4]
-                idxhex = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((w * h + 31) // 32)
-                )[: 2 * w * h]
-                idx = bytes.fromhex(idxhex)
-                cmbytes = bytes.fromhex("".join(
-                    hashlib.sha256(f"{dg}-cm-{i}".encode()).hexdigest()
-                    for i in range(24)
-                ))
-                colormap = [b << 8 for b in cmbytes]
-                payload = encode_tiff_palette(
-                    w, h, idx, colormap, le=True, compression=comp
-                )
-                dw, dh, out = _decode_image("tiff", payload)
-                pm = probe_media(payload)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                )
-                bad = with_short_cmap(payload)
-                try:
-                    _decode_image("tiff", bad)
-                    cq = 0
-                except MediaFormatError:
-                    cq = int(probe_media(bad)["width"] == dw)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "compression": cname,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "probe_agrees": agrees,
-                        "short_cmap_quarantined": cq,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "compression",
-                    "rgb_md5", "probe_agrees",
-                    "short_cmap_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, compression string, "
         "rgb_md5 string, probe_agrees int, short_cmap_quarantined int",
+        build_and_decode,
     )
 
 
@@ -5482,15 +4971,12 @@ FLACIX_DOCS = 12
 @query(
     "audio_flac_index",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {FLACIX_DOCS}
-    ), s AS (
+    WITH {_base_sql(FLACIX_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
+             {_dg_byte(0)} AS s0,
              CAST(('0x' || substr(dg, 3, 4)) AS INT) AS s12,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4
       FROM base
     ), p AS (
       SELECT media_id,
@@ -5509,9 +4995,7 @@ FLACIX_DOCS = 12
       CAST(n * 1000 // rate AS BIGINT) AS duration_ms,
       CAST(((n + bs - 1) // bs + se - 1) // se AS INT)
         AS n_seek_points,
-      CAST(1 AS INT) AS seektable_agrees,
-      CAST(1 AS INT) AS frames_tile,
-      CAST(1 AS INT) AS decode_exact
+      {_flags_sql("seektable_agrees", "frames_tile", "decode_exact")}
     FROM p
     """,
 )
@@ -5535,13 +5019,8 @@ def audio_flac_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < FLACIX_DOCS
-    )
-
-    def build_and_index(batches):
+    def build_and_index(mid, text):
         import hashlib
 
         import numpy as np
@@ -5552,68 +5031,51 @@ def audio_flac_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             flac_frame_index,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                rate = (8000, 16000, 22050, 44100)[dg[0] % 4]
-                n = 3000 + int.from_bytes(dg[1:3], "big") % 20000
-                bs = (512, 1024, 2048, 4096)[dg[3] % 4]
-                se = 1 + dg[4] % 3
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                src = [
-                    int(v)
-                    for v in rng.integers(-20000, 20000, n)
-                ]
-                payload = encode_flac(
-                    src, rate, block_size=bs, seek_every=se
-                )
-                ix = flac_frame_index(payload)
-                _r2, out = decode_flac(payload)
-                pos = ix["frames"][0][0] if ix["frames"] else 0
-                tiles = 1
-                for off, ln, _smp, _bsz in ix["frames"]:
-                    if off != pos:
-                        tiles = 0
-                    pos += ln
-                if pos != len(payload):
-                    tiles = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": ix["sample_rate"],
-                        "n_frames": ix["n_frames"],
-                        "n_samples": ix["n_samples"],
-                        "duration_ms": ix["duration_ms"],
-                        "n_seek_points": len(ix["seektable"] or []),
-                        "seektable_agrees": int(
-                            ix["seektable_agrees"] == 1
-                        ),
-                        "frames_tile": tiles,
-                        "decode_exact": int(out == src),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_frames",
-                    "n_samples", "duration_ms", "n_seek_points",
-                    "seektable_agrees", "frames_tile", "decode_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(FLACIX_DOCS)
-        .mapInPandas(
-            build_and_index,
-            "media_id bigint, sample_rate int, n_frames int, "
-            "n_samples bigint, duration_ms bigint, n_seek_points int, "
-            "seektable_agrees int, frames_tile int, decode_exact int",
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        rate = (8000, 16000, 22050, 44100)[dg[0] % 4]
+        n = 3000 + int.from_bytes(dg[1:3], "big") % 20000
+        bs = (512, 1024, 2048, 4096)[dg[3] % 4]
+        se = 1 + dg[4] % 3
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
         )
+        src = [
+            int(v)
+            for v in rng.integers(-20000, 20000, n)
+        ]
+        payload = encode_flac(
+            src, rate, block_size=bs, seek_every=se
+        )
+        ix = flac_frame_index(payload)
+        _r2, out = decode_flac(payload)
+        pos = ix["frames"][0][0] if ix["frames"] else 0
+        tiles = 1
+        for off, ln, _smp, _bsz in ix["frames"]:
+            if off != pos:
+                tiles = 0
+            pos += ln
+        if pos != len(payload):
+            tiles = 0
+        return {
+            "media_id": mid,
+            "sample_rate": ix["sample_rate"],
+            "n_frames": ix["n_frames"],
+            "n_samples": ix["n_samples"],
+            "duration_ms": ix["duration_ms"],
+            "n_seek_points": len(ix["seektable"] or []),
+            "seektable_agrees": int(
+                ix["seektable_agrees"] == 1
+            ),
+            "frames_tile": tiles,
+            "decode_exact": int(out == src),
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, FLACIX_DOCS,
+        "media_id bigint, sample_rate int, n_frames int, "
+        "n_samples bigint, duration_ms bigint, n_seek_points int, "
+        "seektable_agrees int, frames_tile int, decode_exact int",
+        build_and_index,
     )
 
 
@@ -5623,16 +5085,13 @@ AVPROBE_DOCS = 12
 @query(
     "video_audio_probe",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {AVPROBE_DOCS}
-    ), s AS (
+    WITH {_base_sql(AVPROBE_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4
       FROM base
     )
     SELECT media_id,
@@ -5648,8 +5107,7 @@ AVPROBE_DOCS = 12
            // (CASE s4 % 4 WHEN 0 THEN 44100 WHEN 1 THEN 48000
                WHEN 2 THEN 24000 ELSE 16000 END) AS BIGINT)
         AS audio_dur_ms,
-      CAST(1 AS INT) AS video_decodes,
-      CAST(1 AS INT) AS plain_has_no_audio
+      {_flags_sql("video_decodes", "plain_has_no_audio")}
     FROM s
     """,
 )
@@ -5672,13 +5130,8 @@ def video_audio_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < AVPROBE_DOCS
-    )
-
-    def build_and_probe(batches):
+    def build_and_probe(mid, text):
         import hashlib
 
         import numpy as np
@@ -5691,82 +5144,64 @@ def video_audio_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_media,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 16 + dg[0] % 17
-                h = 16 + dg[1] % 9
-                nf = 2 + dg[2] % 3
-                ch = 1 + dg[3] % 2
-                rate = (44100, 48000, 24000, 16000)[dg[4] % 4]
-                n_aac = 6 + dg[2] % 20
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                frames = [
-                    rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                    .tobytes()
-                    for _ in range(nf)
-                ]
-                aac = [
-                    bytes(rng.integers(0, 256, 40, dtype=np.uint8))
-                    for _ in range(n_aac)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                enc = encode_mp4 if container == "mp4" else encode_mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                payload = enc(w, h, frames, audio=(ch, rate, aac))
-                pm = probe_media(payload)
-                _w2, _h2, _d, out, _s = dec(payload)
-                plain = probe_media(enc(w, h, frames))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": pm["width"],
-                        "height": pm["height"],
-                        "n_frames": pm["n_frames"],
-                        "channels": pm["channels"],
-                        "sample_rate": pm["sample_rate"],
-                        "n_audio_samples": pm["n_samples"],
-                        "audio_dur_ms": (
-                            pm["n_samples"] * 1000 // pm["sample_rate"]
-                            if pm["n_samples"] and pm["sample_rate"]
-                            else -1
-                        ),
-                        "video_decodes": int(
-                            len(out) == nf
-                            and _w2 == w
-                            and _h2 == h
-                        ),
-                        "plain_has_no_audio": int(
-                            plain["channels"] is None
-                            and plain["sample_rate"] is None
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "channels", "sample_rate",
-                    "n_audio_samples", "audio_dur_ms",
-                    "video_decodes", "plain_has_no_audio",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(AVPROBE_DOCS)
-        .mapInPandas(
-            build_and_probe,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, channels int, sample_rate int, "
-            "n_audio_samples bigint, audio_dur_ms bigint, "
-            "video_decodes int, plain_has_no_audio int",
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 16 + dg[0] % 17
+        h = 16 + dg[1] % 9
+        nf = 2 + dg[2] % 3
+        ch = 1 + dg[3] % 2
+        rate = (44100, 48000, 24000, 16000)[dg[4] % 4]
+        n_aac = 6 + dg[2] % 20
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
         )
+        frames = [
+            rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            .tobytes()
+            for _ in range(nf)
+        ]
+        aac = [
+            bytes(rng.integers(0, 256, 40, dtype=np.uint8))
+            for _ in range(n_aac)
+        ]
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        enc = encode_mp4 if container == "mp4" else encode_mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        payload = enc(w, h, frames, audio=(ch, rate, aac))
+        pm = probe_media(payload)
+        _w2, _h2, _d, out, _s = dec(payload)
+        plain = probe_media(enc(w, h, frames))
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": pm["width"],
+            "height": pm["height"],
+            "n_frames": pm["n_frames"],
+            "channels": pm["channels"],
+            "sample_rate": pm["sample_rate"],
+            "n_audio_samples": pm["n_samples"],
+            "audio_dur_ms": (
+                pm["n_samples"] * 1000 // pm["sample_rate"]
+                if pm["n_samples"] and pm["sample_rate"]
+                else -1
+            ),
+            "video_decodes": int(
+                len(out) == nf
+                and _w2 == w
+                and _h2 == h
+            ),
+            "plain_has_no_audio": int(
+                plain["channels"] is None
+                and plain["sample_rate"] is None
+            ),
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, AVPROBE_DOCS,
+        "media_id bigint, container string, width int, height int, "
+        "n_frames int, channels int, sample_rate int, "
+        "n_audio_samples bigint, audio_dur_ms bigint, "
+        "video_decodes int, plain_has_no_audio int",
+        build_and_probe,
     )
 
 
@@ -5776,16 +5211,13 @@ SCRUBX_DOCS = 16
 @query(
     "image_exif_scrub_multi",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {SCRUBX_DOCS}
-    ), s AS (
+    WITH {_base_sql(SCRUBX_DOCS)}, s AS (
       SELECT media_id,
              CAST(('0x' || substr(dg, 1, 4)) AS INT) AS s01,
              CAST(('0x' || substr(dg, 5, 4)) AS INT) AS s23,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5,
+             {_dg_byte(6)} AS s6
       FROM base
     )
     SELECT media_id,
@@ -5797,11 +5229,10 @@ SCRUBX_DOCS = 16
            * (s01 % 90001) AS BIGINT) AS lat_milli,
       CAST(CASE WHEN s6 % 3 = 0 THEN 1 ELSE -1 END
            * (s23 % 180001) AS BIGINT) AS lon_milli,
-      CAST(1 AS INT) AS had_gps,
-      CAST(1 AS INT) AS len_unchanged,
-      CAST(1 AS INT) AS gps_gone,
-      CAST(1 AS INT) AS coded_identical,
-      CAST(1 AS INT) AS idempotent
+      {_flags_sql(
+          "had_gps", "len_unchanged", "gps_gone", "coded_identical",
+          "idempotent",
+      )}
     FROM s
     """,
 )
@@ -5824,13 +5255,8 @@ def image_exif_scrub_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < SCRUBX_DOCS
-    )
-
-    def build_and_scrub(batches):
+    def build_and_scrub(mid, text):
         import hashlib
         import struct as st
 
@@ -5884,110 +5310,88 @@ def image_exif_scrub_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pos += 8 + sz + (sz & 1)
             return b""
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                kind = ("jpeg", "tiff", "png", "webp")[mid % 4]
-                w = 16 + int(dg[8:10], 16) % 17
-                h = 16 + int(dg[10:12], 16) % 9
-                s6 = int(dg[12:14], 16)
-                lat = (1 if s6 % 2 == 0 else -1) * (
-                    int(dg[0:4], 16) % 90001
-                )
-                lon = (1 if s6 % 3 == 0 else -1) * (
-                    int(dg[4:8], 16) % 180001
-                )
-                n = w * h * 3
-                hexsrc = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                rgb = bytes.fromhex(hexsrc)
-                app1 = build_exif_app1(
-                    gps_lat_milli=lat, gps_lon_milli=lon
-                )
-                block = app1[10:]  # past marker+len+'Exif\\0\\0'
-                if kind == "jpeg":
-                    payload = insert_exif(
-                        encode_jpeg_baseline(w, h, rgb, 80), app1
-                    )
-                elif kind == "tiff":
-                    payload = encode_tiff(
-                        w, h, rgb, gps_lat_milli=lat, gps_lon_milli=lon
-                    )
-                elif kind == "png":
-                    payload = insert_png_exif(
-                        encode_png(w, h, rgb), block
-                    )
-                else:
-                    payload = insert_webp_exif(
-                        encode_webp_lossless(w, h, rgb), block
-                    )
-
-                def gps_of(p: bytes):
-                    if kind == "jpeg":
-                        from reindexer_spark.tiff import parse_exif
-
-                        m = parse_exif(p)
-                        return m["gps"] if m else None
-                    if kind == "tiff":
-                        return parse_gps_milli(p)
-                    blk = png_block(p) if kind == "png" else webp_block(p)
-                    return parse_gps_milli(blk) if blk else None
-
-                g0 = gps_of(payload) or {}
-                plat = g0.get("lat_milli")
-                plon = g0.get("lon_milli")
-                out, had, k2 = scrub_image_gps(payload)
-                g1 = gps_of(out)
-                if kind == "jpeg":
-                    same = decode_jpeg_baseline(out) == (
-                        decode_jpeg_baseline(payload)
-                    )
-                elif kind == "tiff":
-                    same = decode_tiff(out) == decode_tiff(payload)
-                elif kind == "png":
-                    same = decode_png(out) == decode_png(payload)
-                else:
-                    same = webp_coded(out) == webp_coded(payload)
-                out2, had2, _k3 = scrub_image_gps(out)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "width": w,
-                        "height": h,
-                        "lat_milli": plat,
-                        "lon_milli": plon,
-                        "had_gps": int(had and k2 == kind),
-                        "len_unchanged": int(len(out) == len(payload)),
-                        "gps_gone": int(g1 is None),
-                        "coded_identical": int(same),
-                        "idempotent": int(not had2 and out2 == out),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "width", "height",
-                    "lat_milli", "lon_milli", "had_gps",
-                    "len_unchanged", "gps_gone", "coded_identical",
-                    "idempotent",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        kind = ("jpeg", "tiff", "png", "webp")[mid % 4]
+        w = 16 + int(dg[8:10], 16) % 17
+        h = 16 + int(dg[10:12], 16) % 9
+        s6 = int(dg[12:14], 16)
+        lat = (1 if s6 % 2 == 0 else -1) * (
+            int(dg[0:4], 16) % 90001
+        )
+        lon = (1 if s6 % 3 == 0 else -1) * (
+            int(dg[4:8], 16) % 180001
+        )
+        n = w * h * 3
+        rgb = _hex_chain(dg, n)
+        app1 = build_exif_app1(
+            gps_lat_milli=lat, gps_lon_milli=lon
+        )
+        block = app1[10:]  # past marker+len+'Exif\\0\\0'
+        if kind == "jpeg":
+            payload = insert_exif(
+                encode_jpeg_baseline(w, h, rgb, 80), app1
+            )
+        elif kind == "tiff":
+            payload = encode_tiff(
+                w, h, rgb, gps_lat_milli=lat, gps_lon_milli=lon
+            )
+        elif kind == "png":
+            payload = insert_png_exif(
+                encode_png(w, h, rgb), block
+            )
+        else:
+            payload = insert_webp_exif(
+                encode_webp_lossless(w, h, rgb), block
             )
 
-    return (
-        docs.select("doc_id", "text")
-        .repartition(SCRUBX_DOCS)
-        .mapInPandas(
-            build_and_scrub,
-            "media_id bigint, kind string, width int, height int, "
-            "lat_milli bigint, lon_milli bigint, had_gps int, "
-            "len_unchanged int, gps_gone int, coded_identical int, "
-            "idempotent int",
-        )
+        def gps_of(p: bytes):
+            if kind == "jpeg":
+                from reindexer_spark.tiff import parse_exif
+
+                m = parse_exif(p)
+                return m["gps"] if m else None
+            if kind == "tiff":
+                return parse_gps_milli(p)
+            blk = png_block(p) if kind == "png" else webp_block(p)
+            return parse_gps_milli(blk) if blk else None
+
+        g0 = gps_of(payload) or {}
+        plat = g0.get("lat_milli")
+        plon = g0.get("lon_milli")
+        out, had, k2 = scrub_image_gps(payload)
+        g1 = gps_of(out)
+        if kind == "jpeg":
+            same = decode_jpeg_baseline(out) == (
+                decode_jpeg_baseline(payload)
+            )
+        elif kind == "tiff":
+            same = decode_tiff(out) == decode_tiff(payload)
+        elif kind == "png":
+            same = decode_png(out) == decode_png(payload)
+        else:
+            same = webp_coded(out) == webp_coded(payload)
+        out2, had2, _k3 = scrub_image_gps(out)
+        return {
+            "media_id": mid,
+            "kind": kind,
+            "width": w,
+            "height": h,
+            "lat_milli": plat,
+            "lon_milli": plon,
+            "had_gps": int(had and k2 == kind),
+            "len_unchanged": int(len(out) == len(payload)),
+            "gps_gone": int(g1 is None),
+            "coded_identical": int(same),
+            "idempotent": int(not had2 and out2 == out),
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, SCRUBX_DOCS,
+        "media_id bigint, kind string, width int, height int, "
+        "lat_milli bigint, lon_milli bigint, had_gps int, "
+        "len_unchanged int, gps_gone int, coded_identical int, "
+        "idempotent int",
+        build_and_scrub,
     )
 
 
@@ -5997,18 +5401,15 @@ EXIF_DOCS = 16
 @query(
     "image_exif_scrub",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {EXIF_DOCS}
-    ), s AS (
+    WITH {_base_sql(EXIF_DOCS)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5,
+             {_dg_byte(6)} AS s6
       FROM base
     )
     SELECT media_id,
@@ -6021,11 +5422,10 @@ EXIF_DOCS = 16
            * ((s4 * 256 + s5) % 180000) AS BIGINT) AS lon_milli,
       CAST(1 AS INT) AS had_gps,
       CAST(0 AS INT) AS gps_after_scrub,
-      CAST(1 AS INT) AS len_unchanged,
-      CAST(1 AS INT) AS pixels_identical,
-      CAST(1 AS INT) AS meta_preserved,
-      CAST(1 AS INT) AS no_exif_passthrough,
-      CAST(1 AS INT) AS tiff_scrub_ok
+      {_flags_sql(
+          "len_unchanged", "pixels_identical", "meta_preserved",
+          "no_exif_passthrough", "tiff_scrub_ok",
+      )}
     FROM s
     """,
 )
@@ -6056,13 +5456,8 @@ def image_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < EXIF_DOCS
-    )
-
-    def build_and_scrub(batches):
+    def build_and_scrub(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import (
@@ -6079,109 +5474,94 @@ def image_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             scrub_tiff_gps,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dgb = hashlib.sha256(r.text.encode("utf-8")).digest()
-                s = list(dgb)
-                w = 16 + s[0] % 17
-                h = 16 + s[1] % 9
-                orientation = 1 + s[2] % 8
-                lat = (1 if s[5] % 2 == 0 else -1) * (
-                    (s[3] * 256 + s[4]) % 90000
-                )
-                lon = (1 if s[6] % 2 == 0 else -1) * (
-                    (s[4] * 256 + s[5]) % 180000
-                )
-                dt = "20%02d:%02d:%02d 12:00:00" % (
-                    10 + s[7] % 15, 1 + s[8] % 12, 1 + s[9] % 28
-                )
-                rng_bytes = hashlib.sha256(dgb).digest()
-                rgb = (rng_bytes * ((w * h * 3) // 32 + 1))[: w * h * 3]
-                plain = encode_jpeg_baseline(w, h, rgb, quality=80)
-                app1 = build_exif_app1(
-                    orientation=orientation,
-                    datetime=dt,
-                    dt_original=dt,
-                    gps_lat_milli=lat,
-                    gps_lon_milli=lon,
-                    le=mid % 2 == 0,
-                )
-                tagged = insert_exif(plain, app1)
-                meta = parse_exif(tagged) or {}
-                gps = meta.get("gps") or {}
-                scrubbed, had = scrub_exif_gps(tagged)
-                after = parse_exif(scrubbed) or {}
-                meta_ok = int(
-                    after.get("make") == meta.get("make")
-                    and after.get("model") == meta.get("model")
-                    and after.get("orientation") == orientation
-                    and after.get("datetime") == dt
-                    and after.get("dt_original") == dt
-                )
-                pix = int(
-                    decode_jpeg_baseline(scrubbed)
-                    == decode_jpeg_baseline(tagged)
-                )
-                # the bare-TIFF twin of the scrub: same coordinates in
-                # a GPSInfo IFD carried by a TIFF file, removed in
-                # place with identical invariants
-                tpix = bytes(
-                    hashlib.sha256(dgb + b"t").digest()
-                    * ((12 * 8 * 3) // 32 + 1)
-                )[: 12 * 8 * 3]
-                t_file = encode_tiff(
-                    12, 8, tpix, gps_lat_milli=lat, gps_lon_milli=lon
-                )
-                t_scrubbed, t_had = scrub_tiff_gps(t_file)
-                tiff_ok = int(
-                    t_had
-                    and len(t_scrubbed) == len(t_file)
-                    and decode_tiff(t_scrubbed) == decode_tiff(t_file)
-                    and scrub_tiff_gps(t_scrubbed)
-                    == (t_scrubbed, False)
-                )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "orientation": meta.get("orientation"),
-                        "lat_milli": gps.get("lat_milli"),
-                        "lon_milli": gps.get("lon_milli"),
-                        "had_gps": int(had),
-                        "gps_after_scrub": int(
-                            (after.get("gps") or None) is not None
-                        ),
-                        "len_unchanged": int(
-                            len(scrubbed) == len(tagged)
-                        ),
-                        "pixels_identical": pix,
-                        "meta_preserved": meta_ok,
-                        "no_exif_passthrough": int(
-                            scrub_exif_gps(plain) == (plain, False)
-                        ),
-                        "tiff_scrub_ok": tiff_ok,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "orientation",
-                    "lat_milli", "lon_milli", "had_gps",
-                    "gps_after_scrub", "len_unchanged",
-                    "pixels_identical", "meta_preserved",
-                    "no_exif_passthrough", "tiff_scrub_ok",
-                ],
-            )
+        dgb = hashlib.sha256(text.encode("utf-8")).digest()
+        s = list(dgb)
+        w = 16 + s[0] % 17
+        h = 16 + s[1] % 9
+        orientation = 1 + s[2] % 8
+        lat = (1 if s[5] % 2 == 0 else -1) * (
+            (s[3] * 256 + s[4]) % 90000
+        )
+        lon = (1 if s[6] % 2 == 0 else -1) * (
+            (s[4] * 256 + s[5]) % 180000
+        )
+        dt = "20%02d:%02d:%02d 12:00:00" % (
+            10 + s[7] % 15, 1 + s[8] % 12, 1 + s[9] % 28
+        )
+        rng_bytes = hashlib.sha256(dgb).digest()
+        rgb = (rng_bytes * ((w * h * 3) // 32 + 1))[: w * h * 3]
+        plain = encode_jpeg_baseline(w, h, rgb, quality=80)
+        app1 = build_exif_app1(
+            orientation=orientation,
+            datetime=dt,
+            dt_original=dt,
+            gps_lat_milli=lat,
+            gps_lon_milli=lon,
+            le=mid % 2 == 0,
+        )
+        tagged = insert_exif(plain, app1)
+        meta = parse_exif(tagged) or {}
+        gps = meta.get("gps") or {}
+        scrubbed, had = scrub_exif_gps(tagged)
+        after = parse_exif(scrubbed) or {}
+        meta_ok = int(
+            after.get("make") == meta.get("make")
+            and after.get("model") == meta.get("model")
+            and after.get("orientation") == orientation
+            and after.get("datetime") == dt
+            and after.get("dt_original") == dt
+        )
+        pix = int(
+            decode_jpeg_baseline(scrubbed)
+            == decode_jpeg_baseline(tagged)
+        )
+        # the bare-TIFF twin of the scrub: same coordinates in
+        # a GPSInfo IFD carried by a TIFF file, removed in
+        # place with identical invariants
+        tpix = bytes(
+            hashlib.sha256(dgb + b"t").digest()
+            * ((12 * 8 * 3) // 32 + 1)
+        )[: 12 * 8 * 3]
+        t_file = encode_tiff(
+            12, 8, tpix, gps_lat_milli=lat, gps_lon_milli=lon
+        )
+        t_scrubbed, t_had = scrub_tiff_gps(t_file)
+        tiff_ok = int(
+            t_had
+            and len(t_scrubbed) == len(t_file)
+            and decode_tiff(t_scrubbed) == decode_tiff(t_file)
+            and scrub_tiff_gps(t_scrubbed)
+            == (t_scrubbed, False)
+        )
+        return {
+            "media_id": mid,
+            "width": w,
+            "height": h,
+            "orientation": meta.get("orientation"),
+            "lat_milli": gps.get("lat_milli"),
+            "lon_milli": gps.get("lon_milli"),
+            "had_gps": int(had),
+            "gps_after_scrub": int(
+                (after.get("gps") or None) is not None
+            ),
+            "len_unchanged": int(
+                len(scrubbed) == len(tagged)
+            ),
+            "pixels_identical": pix,
+            "meta_preserved": meta_ok,
+            "no_exif_passthrough": int(
+                scrub_exif_gps(plain) == (plain, False)
+            ),
+            "tiff_scrub_ok": tiff_ok,
+        }
 
-    return docs.select("doc_id", "text").repartition(EXIF_DOCS).mapInPandas(
-        build_and_scrub,
+    return _fixture_lane(
+        spark, sf_dir, EXIF_DOCS,
         "media_id bigint, width int, height int, orientation int, "
         "lat_milli bigint, lon_milli bigint, had_gps int, "
         "gps_after_scrub int, len_unchanged int, pixels_identical int, "
         "meta_preserved int, no_exif_passthrough int, tiff_scrub_ok int",
+        build_and_scrub,
     )
 
 
@@ -6191,13 +5571,10 @@ ORIENT_DOCS = 16
 @query(
     "image_orient_normalize",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {ORIENT_DOCS}
-    ), dims AS (
+    WITH {_base_sql(ORIENT_DOCS)}, dims AS (
       SELECT media_id, dg,
-             4 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 13 AS w,
-             4 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 9 AS h,
+             4 + {_dg_byte(0)} % 13 AS w,
+             4 + {_dg_byte(1)} % 9 AS h,
              1 + CAST(media_id % 8 AS INT) AS o
       FROM base
     ), chain AS (
@@ -6240,8 +5617,7 @@ ORIENT_DOCS = 16
            CAST(o AS INT) AS orientation,
            md5(rgbhex) AS src_md5,
            md5(outhex) AS rgb_md5,
-           CAST(1 AS INT) AS probe_sees_orientation,
-           CAST(1 AS INT) AS involution_exact
+           {_flags_sql("probe_sees_orientation", "involution_exact")}
     FROM px
     """,
 )
@@ -6267,13 +5643,8 @@ def image_orient_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < ORIENT_DOCS
-    )
-
-    def build_and_normalize(batches):
+    def build_and_normalize(mid, text):
         import hashlib
 
         from reindexer_spark.codecs import _decode_image
@@ -6284,78 +5655,54 @@ def image_orient_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         inverse = {1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 8, 7: 7, 8: 6}
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 4 + int(dg[0:2], 16) % 13
-                h = 4 + int(dg[2:4], 16) % 9
-                o = 1 + mid % 8
-                n = w * h * 3
-                hexsrc = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                rgb = bytes.fromhex(hexsrc)
-                payload = encode_tiff(w, h, rgb, orientation=o)
-                dw, dh, stored = _decode_image("tiff", payload)
-                po = probe_tiff(payload)["orientation"]
-                ow, oh, out = apply_orientation(dw, dh, stored, o)
-                bw, bh, back = apply_orientation(
-                    ow, oh, out, inverse[o]
-                )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": ow,
-                        "height": oh,
-                        "orientation": o,
-                        "src_md5": hashlib.md5(
-                            stored.hex().encode()
-                        ).hexdigest(),
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "probe_sees_orientation": int(po == o),
-                        "involution_exact": int(
-                            (bw, bh, back) == (dw, dh, stored)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "orientation",
-                    "src_md5", "rgb_md5", "probe_sees_orientation",
-                    "involution_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(ORIENT_DOCS)
-        .mapInPandas(
-            build_and_normalize,
-            "media_id bigint, width int, height int, orientation int, "
-            "src_md5 string, rgb_md5 string, "
-            "probe_sees_orientation int, involution_exact int",
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 4 + int(dg[0:2], 16) % 13
+        h = 4 + int(dg[2:4], 16) % 9
+        o = 1 + mid % 8
+        n = w * h * 3
+        rgb = _hex_chain(dg, n)
+        payload = encode_tiff(w, h, rgb, orientation=o)
+        dw, dh, stored = _decode_image("tiff", payload)
+        po = probe_tiff(payload)["orientation"]
+        ow, oh, out = apply_orientation(dw, dh, stored, o)
+        bw, bh, back = apply_orientation(
+            ow, oh, out, inverse[o]
         )
+        return {
+            "media_id": mid,
+            "width": ow,
+            "height": oh,
+            "orientation": o,
+            "src_md5": hashlib.md5(
+                stored.hex().encode()
+            ).hexdigest(),
+            "rgb_md5": hashlib.md5(
+                out.hex().encode()
+            ).hexdigest(),
+            "probe_sees_orientation": int(po == o),
+            "involution_exact": int(
+                (bw, bh, back) == (dw, dh, stored)
+            ),
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, ORIENT_DOCS,
+        "media_id bigint, width int, height int, orientation int, "
+        "src_md5 string, rgb_md5 string, "
+        "probe_sees_orientation int, involution_exact int",
+        build_and_normalize,
     )
 
 
 @query(
     "image_tiff_jpeg",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
+    WITH {_base_sql(TIFF_DOCS)}, dims AS (
       SELECT media_id,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 28 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 24 AS h,
-             5 + CAST(('0x' || substr(dg, 5, 2)) AS INT) % 11 AS rps,
-             75 + CAST(('0x' || substr(dg, 7, 2)) AS INT) % 20 AS q
+             21 + {_dg_byte(0)} % 28 AS w,
+             17 + {_dg_byte(1)} % 24 AS h,
+             5 + {_dg_byte(2)} % 11 AS rps,
+             75 + {_dg_byte(3)} % 20 AS q
       FROM base
     )
     SELECT media_id,
@@ -6366,11 +5713,10 @@ def image_orient_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((h + rps - 1) // rps AS INT) AS n_strips,
            CASE WHEN media_id % 2 = 0 THEN 'tables' ELSE 'inline' END
              AS layout,
-           CAST(1 AS INT) AS splice_matches_inline,
-           CAST(1 AS INT) AS lossy_close,
-           CAST(1 AS INT) AS tables_smaller,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS old_style_quarantined
+           {_flags_sql(
+               "splice_matches_inline", "lossy_close", "tables_smaller",
+               "probe_agrees", "old_style_quarantined",
+           )}
     FROM dims
     """,
 )
@@ -6403,15 +5749,9 @@ def image_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         import numpy as np
 
@@ -6423,110 +5763,76 @@ def image_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_tiff,
         )
 
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 21 + int(dg[0:2], 16) % 28
+        h = 17 + int(dg[2:4], 16) % 24
+        rps = 5 + int(dg[4:6], 16) % 11
+        q = 75 + int(dg[6:8], 16) % 20
+        nbytes = w * h * 3
+        src = _hex_chain(dg, nbytes)
+        p_tab = encode_tiff_jpeg(
+            w, h, src, quality=q, rows_per_strip=rps,
+            tables_mode=True,
+        )
+        p_inl = encode_tiff_jpeg(
+            w, h, src, quality=q, rows_per_strip=rps,
+            tables_mode=False,
+        )
+        mine = p_tab if mid % 2 == 0 else p_inl
+        dw, dh, out = decode_tiff(mine)
+        splice_ok = int(
+            decode_tiff(p_tab) == decode_tiff(p_inl)
+        )
+        a = np.frombuffer(out, dtype=np.uint8).astype(np.int64)
+        b = np.frombuffer(src, dtype=np.uint8).astype(np.int64)
+        close = int(float(np.abs(a - b).mean()) < 25.0)
+        pm = probe_tiff(mine)
+        agrees = int(
+            pm["compression"] == 7
+            and pm["width"] == dw == w
+            and pm["height"] == dh == h
+            and pm["n_strips"] == (h + rps - 1) // rps
+        )
+        old = _patch_ifd_tag(mine, TAG_COMPRESSION, 6)
+        try:
+            decode_tiff(old)
+            old_q = 0
+        except MediaFormatError:
+            old_q = int(probe_tiff(old)["width"] == w)
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "rows_per_strip": rps,
+            "quality": q,
+            "n_strips": (h + rps - 1) // rps,
+            "layout": "tables" if mid % 2 == 0 else "inline",
+            "splice_matches_inline": splice_ok,
+            "lossy_close": close,
+            "tables_smaller": int(len(p_tab) < len(p_inl)),
+            "probe_agrees": agrees,
+            "old_style_quarantined": old_q,
+        }
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 21 + int(dg[0:2], 16) % 28
-                h = 17 + int(dg[2:4], 16) % 24
-                rps = 5 + int(dg[4:6], 16) % 11
-                q = 75 + int(dg[6:8], 16) % 20
-                nbytes = w * h * 3
-                src = bytes.fromhex(
-                    "".join(
-                        hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                        for i in range((nbytes + 31) // 32)
-                    )[: 2 * nbytes]
-                )
-                p_tab = encode_tiff_jpeg(
-                    w, h, src, quality=q, rows_per_strip=rps,
-                    tables_mode=True,
-                )
-                p_inl = encode_tiff_jpeg(
-                    w, h, src, quality=q, rows_per_strip=rps,
-                    tables_mode=False,
-                )
-                mine = p_tab if mid % 2 == 0 else p_inl
-                dw, dh, out = decode_tiff(mine)
-                splice_ok = int(
-                    decode_tiff(p_tab) == decode_tiff(p_inl)
-                )
-                a = np.frombuffer(out, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(src, dtype=np.uint8).astype(np.int64)
-                close = int(float(np.abs(a - b).mean()) < 25.0)
-                pm = probe_tiff(mine)
-                agrees = int(
-                    pm["compression"] == 7
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["n_strips"] == (h + rps - 1) // rps
-                )
-                old = with_compression(mine, 6)
-                try:
-                    decode_tiff(old)
-                    old_q = 0
-                except MediaFormatError:
-                    old_q = int(probe_tiff(old)["width"] == w)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "rows_per_strip": rps,
-                        "quality": q,
-                        "n_strips": (h + rps - 1) // rps,
-                        "layout": "tables" if mid % 2 == 0 else "inline",
-                        "splice_matches_inline": splice_ok,
-                        "lossy_close": close,
-                        "tables_smaller": int(len(p_tab) < len(p_inl)),
-                        "probe_agrees": agrees,
-                        "old_style_quarantined": old_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "rows_per_strip",
-                    "quality", "n_strips", "layout",
-                    "splice_matches_inline", "lossy_close",
-                    "tables_smaller", "probe_agrees",
-                    "old_style_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, rows_per_strip int, "
         "quality int, n_strips int, layout string, "
         "splice_matches_inline int, lossy_close int, tables_smaller int, "
         "probe_agrees int, old_style_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "video_bimplicit",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {14}
-    ), s AS (
+    WITH {_base_sql(14)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3
       FROM base
     )
     SELECT media_id,
@@ -6536,11 +5842,10 @@ def image_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
       CAST(5 + s2 % 2 AS INT) AS n_frames,
       CAST(20 + s3 % 16 AS INT) AS qp,
       CAST((5 + s2 % 2 - 1) // 2 AS INT) AS n_b,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS headerless_weights,
-      CAST(1 AS INT) AS implicit_smaller,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS containers_agree
+      {_flags_sql(
+          "decodable", "headerless_weights", "implicit_smaller", "recon_exact",
+          "containers_agree",
+      )}
     FROM s
     """,
 )
@@ -6572,13 +5877,8 @@ def video_bimplicit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched mapInPandas over a bounded fixture
     set, payloads never shuffle — same as every video lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 14
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -6599,116 +5899,102 @@ def video_bimplicit(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_pps,
         )
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 5 + dg[2] % 2
-                qp = 20 + dg[3] % 16
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(30, 226, (h, w, 3)).astype(
-                    np.float64
-                )
-                frames = [
-                    np.clip(base * (1.0 - 0.16 * i) + 7 * i, 0, 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for i in range(n_frames)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                sps, pps, wn, wrec = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    weighted="implicit",
-                )
-                _s, _p, pn = encode_h264_ipb(w, h, frames, qp=qp)
-                n_b = sum(1 for n in wn if (n[0] >> 5) == 0)
-                p_identical = all(
-                    a == b
-                    for a, b in zip(wn, pn)
-                    if (a[0] >> 5) != 0
-                )
-                implicit_smaller = int(
-                    p_identical
-                    and sum(len(x) for x in wn)
-                    < sum(len(x) for x in pn)
-                )
-                # parse the first B header back: the implicit marker,
-                # idc 2 in the PPS, and NO table entries
-                headerless = 0
-                try:
-                    b_nal = next(n for n in wn if (n[0] >> 5) == 0)
-                    rr = _BitReader(_unescape_rbsp(b_nal[1:]))
-                    _st, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, _parse_sps_slice_fields(sps),
-                        parse_pps(pps), idr=False, nal_ref_idc=0,
-                    )
-                    headerless = int(
-                        parse_pps(pps)["weighted_bipred"] == 2
-                        and info.get("wpb") == {"implicit": True}
-                    )
-                except MediaFormatError:
-                    headerless = 0
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wpi"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wpi"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                recon_exact = int(out == wrec and len(out) == n_frames)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2)
-                except MediaFormatError:
-                    agree = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "n_b": n_b,
-                        "decodable": decodable,
-                        "headerless_weights": headerless,
-                        "implicit_smaller": implicit_smaller,
-                        "recon_exact": recon_exact,
-                        "containers_agree": agree,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "n_b", "decodable",
-                    "headerless_weights", "implicit_smaller",
-                    "recon_exact", "containers_agree",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (16 + dg[0] % 13)
+        h = 2 * (16 + dg[1] % 9)
+        n_frames = 5 + dg[2] % 2
+        qp = 20 + dg[3] % 16
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
+        )
+        base = rng.integers(30, 226, (h, w, 3)).astype(
+            np.float64
+        )
+        frames = [
+            np.clip(base * (1.0 - 0.16 * i) + 7 * i, 0, 255)
+            .astype(np.uint8)
+            .tobytes()
+            for i in range(n_frames)
+        ]
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        sps, pps, wn, wrec = encode_h264_ipb(
+            w, h, frames, qp=qp, return_recon=True,
+            weighted="implicit",
+        )
+        _s, _p, pn = encode_h264_ipb(w, h, frames, qp=qp)
+        n_b = sum(1 for n in wn if (n[0] >> 5) == 0)
+        p_identical = all(
+            a == b
+            for a, b in zip(wn, pn)
+            if (a[0] >> 5) != 0
+        )
+        implicit_smaller = int(
+            p_identical
+            and sum(len(x) for x in wn)
+            < sum(len(x) for x in pn)
+        )
+        # parse the first B header back: the implicit marker,
+        # idc 2 in the PPS, and NO table entries
+        headerless = 0
+        try:
+            b_nal = next(n for n in wn if (n[0] >> 5) == 0)
+            rr = _BitReader(_unescape_rbsp(b_nal[1:]))
+            _st, _q, _d, _a, _b2, info = _parse_slice_header(
+                rr, _parse_sps_slice_fields(sps),
+                parse_pps(pps), idr=False, nal_ref_idc=0,
             )
+            headerless = int(
+                parse_pps(pps)["weighted_bipred"] == 2
+                and info.get("wpb") == {"implicit": True}
+            )
+        except MediaFormatError:
+            headerless = 0
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-wpi"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ipb-wpi"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, _sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out = []
+            decodable = 0
+        recon_exact = int(out == wrec and len(out) == n_frames)
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2)
+        except MediaFormatError:
+            agree = 0
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "qp": qp,
+            "n_b": n_b,
+            "decodable": decodable,
+            "headerless_weights": headerless,
+            "implicit_smaller": implicit_smaller,
+            "recon_exact": recon_exact,
+            "containers_agree": agree,
+        }
 
-    return docs.select("doc_id", "text").repartition(14).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, 14,
         "media_id bigint, container string, width int, height int, "
         "n_frames int, qp int, n_b int, decodable int, "
         "headerless_weights int, implicit_smaller int, recon_exact int, "
         "containers_agree int",
+        build_and_decode,
     )
 
 
@@ -6718,17 +6004,14 @@ WEBP_ANIM_DOCS = 16
 @query(
     "webp_anim_decode",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {WEBP_ANIM_DOCS}
-    ), g AS (
+    WITH {_base_sql(WEBP_ANIM_DOCS)}, g AS (
       SELECT media_id, dg,
-             17 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 24 AS w,
-             14 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 16 AS h,
-             2 + CAST(('0x' || substr(dg, 5, 2)) AS INT) % 3 AS nf,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5
+             17 + {_dg_byte(0)} % 24 AS w,
+             14 + {_dg_byte(1)} % 16 AS h,
+             2 + {_dg_byte(2)} % 3 AS nf,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5
       FROM base
     ), geo2 AS (
       -- per overlay frame j >= 1: an even full-width band start and
@@ -6817,8 +6100,7 @@ WEBP_ANIM_DOCS = 16
            CAST(mid2.total AS BIGINT) AS total_ms,
            CAST(mid2.mid_idx AS INT) AS mid_frame_idx,
            md5(px.rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS lossy_quarantined,
-           CAST(1 AS INT) AS still_rejected
+           {_flags_sql("lossy_quarantined", "still_rejected")}
     FROM px JOIN mid2 ON mid2.media_id = px.media_id
     """,
 )
@@ -6869,16 +6151,6 @@ def webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_webp_anim,
         )
 
-        def chain(dg, j, nbytes):
-            out = []
-            i = 0
-            while len(out) * 32 < nbytes:
-                out.append(
-                    hashlib.sha256(f"{dg}-{j}-{i}".encode()).digest()
-                )
-                i += 1
-            return b"".join(out)[:nbytes]
-
         sampler = WebpAnimSampler()
         for pdf in batches:
             rows = []
@@ -6894,7 +6166,7 @@ def webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 frames = [
                     {
                         "x": 0, "y": 0, "w": w, "h": h,
-                        "rgb": chain(dg, 0, h * w * 3),
+                        "rgb": _hex_chain(dg, h * w * 3, "0-"),
                         "duration_ms": 40 + 30 * (s3 % 4),
                         "blend": False,
                     }
@@ -6905,7 +6177,7 @@ def webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                     frames.append(
                         {
                             "x": 0, "y": y, "w": w, "h": hh,
-                            "rgb": chain(dg, j, hh * w * 3),
+                            "rgb": _hex_chain(dg, hh * w * 3, f"{j}-"),
                             "duration_ms": 40 + 30 * ((s3 + j) % 4),
                             "blend": False,
                         }
@@ -6967,22 +6239,19 @@ def webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "image_tiff_ccitt",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), g AS (
+    WITH {_base_sql(TIFF_DOCS)}, g AS (
       SELECT media_id, dg,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 40 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 20 AS h,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6,
-             CAST(('0x' || substr(dg, 15, 2)) AS INT) AS s7,
-             CAST(('0x' || substr(dg, 17, 2)) AS INT) AS s8,
-             CAST(('0x' || substr(dg, 19, 2)) AS INT) AS s9,
-             CAST(('0x' || substr(dg, 21, 2)) AS INT) AS s10
+             21 + {_dg_byte(0)} % 40 AS w,
+             17 + {_dg_byte(1)} % 20 AS h,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5,
+             {_dg_byte(6)} AS s6,
+             {_dg_byte(7)} AS s7,
+             {_dg_byte(8)} AS s8,
+             {_dg_byte(9)} AS s9,
+             {_dg_byte(10)} AS s10
       FROM base
     ), r AS (
       SELECT media_id, dg, w, h, s10,
@@ -7025,10 +6294,10 @@ def webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN media_id % 2 = 0 THEN 'msb' ELSE 'lsb' END
              AS fillorder,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS g4_smaller,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS g3_quarantined
+           {_flags_sql(
+               "roundtrip_exact", "g4_smaller", "probe_agrees",
+               "g3_quarantined",
+           )}
     FROM px
     """,
 )
@@ -7062,15 +6331,9 @@ def image_tiff_ccitt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         import numpy as np
 
@@ -7082,133 +6345,103 @@ def image_tiff_ccitt(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_tiff,
         )
 
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
+        w = 21 + s[0] % 40
+        h = 17 + s[1] % 20
+        x1, y1 = s[2] % w, s[4] % h
+        w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
+        x2, y2 = s[6] % w, s[8] % h
+        w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
+        rps = 5 + s[10] % 7
+        page = np.zeros((h, w), dtype=np.uint8)
+        page[y1 : y1 + h1, x1 : x1 + w1] = 1
+        page[y2 : y2 + h2, x2 : x2 + w2] = 1
+        nz = _hex_chain(dg, w, "n-").hex()
+        for j in range(2 * w):
+            if int(nz[j], 16) % 2:
+                page[h - 2 + j // w, j % w] = 1
+        flat = bytearray(page.reshape(-1).tolist())
+        fo = 1 if mid % 2 == 0 else 2
+        payload = encode_tiff_g4(
+            w, h, flat, rows_per_strip=rps, fillorder=fo
+        )
+        dw, dh, rgb = decode_tiff(payload)
+        a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+        decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
+        exact = int(np.array_equal(decoded_bits, page))
+        pm = probe_tiff(payload)
+        n_strips = (h + rps - 1) // rps
+        agrees = int(
+            pm["compression"] == 4
+            and pm["width"] == dw == w
+            and pm["height"] == dh == h
+            and pm["bits"] == 1
+            and pm["n_strips"] == n_strips
+        )
+        # strip bytes vs the packed 1-bit raster
+        from reindexer_spark.ccitt import g4_encode
 
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                mid = int(rr.doc_id)
-                dg = hashlib.sha256(rr.text.encode("utf-8")).hexdigest()
-                s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
-                w = 21 + s[0] % 40
-                h = 17 + s[1] % 20
-                x1, y1 = s[2] % w, s[4] % h
-                w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
-                x2, y2 = s[6] % w, s[8] % h
-                w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
-                rps = 5 + s[10] % 7
-                page = np.zeros((h, w), dtype=np.uint8)
-                page[y1 : y1 + h1, x1 : x1 + w1] = 1
-                page[y2 : y2 + h2, x2 : x2 + w2] = 1
-                nz = "".join(
-                    hashlib.sha256(f"{dg}-n-{i}".encode()).hexdigest()
-                    for i in range((2 * w + 63) // 64)
+        strip_bytes = sum(
+            len(
+                g4_encode(
+                    flat[r0 * w : min(r0 + rps, h) * w],
+                    w,
+                    min(rps, h - r0),
+                    fillorder=fo,
                 )
-                for j in range(2 * w):
-                    if int(nz[j], 16) % 2:
-                        page[h - 2 + j // w, j % w] = 1
-                flat = bytearray(page.reshape(-1).tolist())
-                fo = 1 if mid % 2 == 0 else 2
-                payload = encode_tiff_g4(
-                    w, h, flat, rows_per_strip=rps, fillorder=fo
-                )
-                dw, dh, rgb = decode_tiff(payload)
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
-                exact = int(np.array_equal(decoded_bits, page))
-                pm = probe_tiff(payload)
-                n_strips = (h + rps - 1) // rps
-                agrees = int(
-                    pm["compression"] == 4
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["bits"] == 1
-                    and pm["n_strips"] == n_strips
-                )
-                # strip bytes vs the packed 1-bit raster
-                from reindexer_spark.ccitt import g4_encode
-
-                strip_bytes = sum(
-                    len(
-                        g4_encode(
-                            flat[r0 * w : min(r0 + rps, h) * w],
-                            w,
-                            min(rps, h - r0),
-                            fillorder=fo,
-                        )
-                    )
-                    for r0 in range(0, h, rps)
-                )
-                smaller = int(strip_bytes < ((w + 7) // 8) * h)
-                try:
-                    decode_tiff(with_compression(payload, 3))
-                    g3q = 0
-                except MediaFormatError:
-                    g3q = int(
-                        probe_tiff(with_compression(payload, 3))["width"]
-                        == w
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "n_strips": n_strips,
-                        "fillorder": "msb" if fo == 1 else "lsb",
-                        "rgb_md5": hashlib.md5(
-                            rgb.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": exact,
-                        "g4_smaller": smaller,
-                        "probe_agrees": agrees,
-                        "g3_quarantined": g3q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_strips",
-                    "fillorder", "rgb_md5", "roundtrip_exact",
-                    "g4_smaller", "probe_agrees", "g3_quarantined",
-                ],
             )
+            for r0 in range(0, h, rps)
+        )
+        smaller = int(strip_bytes < ((w + 7) // 8) * h)
+        try:
+            decode_tiff(_patch_ifd_tag(payload, TAG_COMPRESSION, 3))
+            g3q = 0
+        except MediaFormatError:
+            g3q = int(
+                probe_tiff(_patch_ifd_tag(payload, TAG_COMPRESSION, 3))["width"]
+                == w
+            )
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "n_strips": n_strips,
+            "fillorder": "msb" if fo == 1 else "lsb",
+            "rgb_md5": hashlib.md5(
+                rgb.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": exact,
+            "g4_smaller": smaller,
+            "probe_agrees": agrees,
+            "g3_quarantined": g3q,
+        }
 
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, n_strips int, "
         "fillorder string, rgb_md5 string, roundtrip_exact int, "
         "g4_smaller int, probe_agrees int, g3_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "image_tiff_mh",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), g AS (
+    WITH {_base_sql(TIFF_DOCS)}, g AS (
       SELECT media_id, dg,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 40 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 20 AS h,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6,
-             CAST(('0x' || substr(dg, 15, 2)) AS INT) AS s7,
-             CAST(('0x' || substr(dg, 17, 2)) AS INT) AS s8,
-             CAST(('0x' || substr(dg, 19, 2)) AS INT) AS s9,
-             CAST(('0x' || substr(dg, 21, 2)) AS INT) AS s10
+             21 + {_dg_byte(0)} % 40 AS w,
+             17 + {_dg_byte(1)} % 20 AS h,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5,
+             {_dg_byte(6)} AS s6,
+             {_dg_byte(7)} AS s7,
+             {_dg_byte(8)} AS s8,
+             {_dg_byte(9)} AS s9,
+             {_dg_byte(10)} AS s10
       FROM base
     ), r AS (
       SELECT media_id, dg, w, h, s10,
@@ -7251,10 +6484,10 @@ def image_tiff_ccitt(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN media_id % 2 = 0 THEN 'msb' ELSE 'lsb' END
              AS fillorder,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS mh_smaller,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS g3_quarantined
+           {_flags_sql(
+               "roundtrip_exact", "mh_smaller", "probe_agrees",
+               "g3_quarantined",
+           )}
     FROM px
     """,
 )
@@ -7279,15 +6512,9 @@ def image_tiff_mh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         import numpy as np
 
@@ -7299,134 +6526,104 @@ def image_tiff_mh(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_tiff,
         )
 
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
+        w = 21 + s[0] % 40
+        h = 17 + s[1] % 20
+        x1, y1 = s[2] % w, s[4] % h
+        w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
+        x2, y2 = s[6] % w, s[8] % h
+        w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
+        rps = 5 + s[10] % 7
+        page = np.zeros((h, w), dtype=np.uint8)
+        page[y1 : y1 + h1, x1 : x1 + w1] = 1
+        page[y2 : y2 + h2, x2 : x2 + w2] = 1
+        nz = _hex_chain(dg, w, "n-").hex()
+        for j in range(2 * w):
+            if int(nz[j], 16) % 2:
+                page[h - 2 + j // w, j % w] = 1
+        flat = bytearray(page.reshape(-1).tolist())
+        fo = 1 if mid % 2 == 0 else 2
+        payload = encode_tiff_g4(
+            w, h, flat, rows_per_strip=rps, fillorder=fo,
+            compression=2,
+        )
+        dw, dh, rgb = decode_tiff(payload)
+        a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+        decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
+        exact = int(np.array_equal(decoded_bits, page))
+        pm = probe_tiff(payload)
+        n_strips = (h + rps - 1) // rps
+        agrees = int(
+            pm["compression"] == 2
+            and pm["width"] == dw == w
+            and pm["height"] == dh == h
+            and pm["bits"] == 1
+            and pm["n_strips"] == n_strips
+        )
+        # strip bytes vs the packed 1-bit raster
+        from reindexer_spark.ccitt import mh_encode
 
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                mid = int(rr.doc_id)
-                dg = hashlib.sha256(rr.text.encode("utf-8")).hexdigest()
-                s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
-                w = 21 + s[0] % 40
-                h = 17 + s[1] % 20
-                x1, y1 = s[2] % w, s[4] % h
-                w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
-                x2, y2 = s[6] % w, s[8] % h
-                w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
-                rps = 5 + s[10] % 7
-                page = np.zeros((h, w), dtype=np.uint8)
-                page[y1 : y1 + h1, x1 : x1 + w1] = 1
-                page[y2 : y2 + h2, x2 : x2 + w2] = 1
-                nz = "".join(
-                    hashlib.sha256(f"{dg}-n-{i}".encode()).hexdigest()
-                    for i in range((2 * w + 63) // 64)
+        strip_bytes = sum(
+            len(
+                mh_encode(
+                    flat[r0 * w : min(r0 + rps, h) * w],
+                    w,
+                    min(rps, h - r0),
+                    fillorder=fo,
                 )
-                for j in range(2 * w):
-                    if int(nz[j], 16) % 2:
-                        page[h - 2 + j // w, j % w] = 1
-                flat = bytearray(page.reshape(-1).tolist())
-                fo = 1 if mid % 2 == 0 else 2
-                payload = encode_tiff_g4(
-                    w, h, flat, rows_per_strip=rps, fillorder=fo,
-                    compression=2,
-                )
-                dw, dh, rgb = decode_tiff(payload)
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
-                exact = int(np.array_equal(decoded_bits, page))
-                pm = probe_tiff(payload)
-                n_strips = (h + rps - 1) // rps
-                agrees = int(
-                    pm["compression"] == 2
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["bits"] == 1
-                    and pm["n_strips"] == n_strips
-                )
-                # strip bytes vs the packed 1-bit raster
-                from reindexer_spark.ccitt import mh_encode
-
-                strip_bytes = sum(
-                    len(
-                        mh_encode(
-                            flat[r0 * w : min(r0 + rps, h) * w],
-                            w,
-                            min(rps, h - r0),
-                            fillorder=fo,
-                        )
-                    )
-                    for r0 in range(0, h, rps)
-                )
-                smaller = int(strip_bytes < ((w + 7) // 8) * h)
-                try:
-                    decode_tiff(with_compression(payload, 3))
-                    g3q = 0
-                except MediaFormatError:
-                    g3q = int(
-                        probe_tiff(with_compression(payload, 3))["width"]
-                        == w
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "n_strips": n_strips,
-                        "fillorder": "msb" if fo == 1 else "lsb",
-                        "rgb_md5": hashlib.md5(
-                            rgb.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": exact,
-                        "mh_smaller": smaller,
-                        "probe_agrees": agrees,
-                        "g3_quarantined": g3q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_strips",
-                    "fillorder", "rgb_md5", "roundtrip_exact",
-                    "mh_smaller", "probe_agrees", "g3_quarantined",
-                ],
             )
+            for r0 in range(0, h, rps)
+        )
+        smaller = int(strip_bytes < ((w + 7) // 8) * h)
+        try:
+            decode_tiff(_patch_ifd_tag(payload, TAG_COMPRESSION, 3))
+            g3q = 0
+        except MediaFormatError:
+            g3q = int(
+                probe_tiff(_patch_ifd_tag(payload, TAG_COMPRESSION, 3))["width"]
+                == w
+            )
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "n_strips": n_strips,
+            "fillorder": "msb" if fo == 1 else "lsb",
+            "rgb_md5": hashlib.md5(
+                rgb.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": exact,
+            "mh_smaller": smaller,
+            "probe_agrees": agrees,
+            "g3_quarantined": g3q,
+        }
 
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, n_strips int, "
         "fillorder string, rgb_md5 string, roundtrip_exact int, "
         "mh_smaller int, probe_agrees int, g3_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "image_tiff_g3",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), g AS (
+    WITH {_base_sql(TIFF_DOCS)}, g AS (
       SELECT media_id, dg,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 40 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 20 AS h,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6,
-             CAST(('0x' || substr(dg, 15, 2)) AS INT) AS s7,
-             CAST(('0x' || substr(dg, 17, 2)) AS INT) AS s8,
-             CAST(('0x' || substr(dg, 19, 2)) AS INT) AS s9,
-             CAST(('0x' || substr(dg, 21, 2)) AS INT) AS s10
+             21 + {_dg_byte(0)} % 40 AS w,
+             17 + {_dg_byte(1)} % 20 AS h,
+             {_dg_byte(2)} AS s2,
+             {_dg_byte(3)} AS s3,
+             {_dg_byte(4)} AS s4,
+             {_dg_byte(5)} AS s5,
+             {_dg_byte(6)} AS s6,
+             {_dg_byte(7)} AS s7,
+             {_dg_byte(8)} AS s8,
+             {_dg_byte(9)} AS s9,
+             {_dg_byte(10)} AS s10
       FROM base
     ), r AS (
       SELECT media_id, dg, w, h, s10,
@@ -7469,10 +6666,10 @@ def image_tiff_mh(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN media_id % 2 = 0 THEN 'msb' ELSE 'lsb' END
              AS fillorder,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS eol_framed,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS g3_quarantined
+           {_flags_sql(
+               "roundtrip_exact", "eol_framed", "probe_agrees",
+               "g3_quarantined",
+           )}
     FROM px
     """,
 )
@@ -7495,13 +6692,8 @@ def image_tiff_g3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
         import struct as st
 
@@ -7509,152 +6701,121 @@ def image_tiff_g3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from reindexer_spark.codecs import MediaFormatError
         from reindexer_spark.tiff import (
-            TAG_COMPRESSION,
             decode_tiff,
             encode_tiff_g4,
             probe_tiff,
         )
 
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
-
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                mid = int(rr.doc_id)
-                dg = hashlib.sha256(rr.text.encode("utf-8")).hexdigest()
-                s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
-                w = 21 + s[0] % 40
-                h = 17 + s[1] % 20
-                x1, y1 = s[2] % w, s[4] % h
-                w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
-                x2, y2 = s[6] % w, s[8] % h
-                w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
-                rps = 5 + s[10] % 7
-                page = np.zeros((h, w), dtype=np.uint8)
-                page[y1 : y1 + h1, x1 : x1 + w1] = 1
-                page[y2 : y2 + h2, x2 : x2 + w2] = 1
-                nz = "".join(
-                    hashlib.sha256(f"{dg}-n-{i}".encode()).hexdigest()
-                    for i in range((2 * w + 63) // 64)
-                )
-                for j in range(2 * w):
-                    if int(nz[j], 16) % 2:
-                        page[h - 2 + j // w, j % w] = 1
-                flat = bytearray(page.reshape(-1).tolist())
-                fo = 1 if mid % 2 == 0 else 2
-                payload = encode_tiff_g4(
-                    w, h, flat, rows_per_strip=rps, fillorder=fo,
-                    compression=3, t4_2d=(mid % 2 == 0),
-                )
-                dw, dh, rgb = decode_tiff(payload)
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
-                exact = int(np.array_equal(decoded_bits, page))
-                pm = probe_tiff(payload)
-                n_strips = (h + rps - 1) // rps
-                agrees = int(
-                    pm["compression"] == 3
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["bits"] == 1
-                    and pm["n_strips"] == n_strips
-                )
-                # strip bytes vs the packed 1-bit raster
-                # the G3 signature: every strip opens with (fill+)EOL
-                first_off = None
-                buf0 = payload
-                (ifd0,) = st.unpack_from("<I", buf0, 4)
-                (n0,) = st.unpack_from("<H", buf0, ifd0)
-                for i0 in range(n0):
-                    e0 = ifd0 + 2 + 12 * i0
-                    if st.unpack_from("<H", buf0, e0)[0] == 273:
-                        (voff0,) = st.unpack_from("<I", buf0, e0 + 8)
-                        (first_off,) = st.unpack_from("<I", buf0, voff0)
-                        break
-                sb = payload[first_off : first_off + 2]
-                if fo == 2:
-                    sb = bytes(
-                        int(f"{b:08b}"[::-1], 2) for b in sb
-                    )
-                bits16 = (sb[0] << 8) | sb[1]
-                # first 12 bits must be 000000000001 (no leading fill
-                # in this encoder's output)
-                smaller = int(bits16 >> 4 == 1)
-                from reindexer_spark.tiff import TAG_T4_OPTIONS
-
-                def with_t4opts(p2: bytes, val: int) -> bytes:
-                    buf = bytearray(p2)
-                    (ifd,) = st.unpack_from("<I", buf, 4)
-                    (n2,) = st.unpack_from("<H", buf, ifd)
-                    for i2 in range(n2):
-                        e2 = ifd + 2 + 12 * i2
-                        if st.unpack_from("<H", buf, e2)[0] == TAG_T4_OPTIONS:
-                            st.pack_into("<I", buf, e2 + 8, val)
-                            return bytes(buf)
-                    raise MediaFormatError("fixture lacks T4Options")
-
-                try:
-                    decode_tiff(with_t4opts(payload, 2))
-                    g3q = 0
-                except MediaFormatError:
-                    g3q = int(
-                        probe_tiff(with_t4opts(payload, 2))["width"] == w
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "n_strips": n_strips,
-                        "fillorder": "msb" if fo == 1 else "lsb",
-                        "rgb_md5": hashlib.md5(
-                            rgb.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": exact,
-                        "eol_framed": smaller,
-                        "probe_agrees": agrees,
-                        "g3_quarantined": g3q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_strips",
-                    "fillorder", "rgb_md5", "roundtrip_exact",
-                    "eol_framed", "probe_agrees", "g3_quarantined",
-                ],
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
+        w = 21 + s[0] % 40
+        h = 17 + s[1] % 20
+        x1, y1 = s[2] % w, s[4] % h
+        w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
+        x2, y2 = s[6] % w, s[8] % h
+        w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
+        rps = 5 + s[10] % 7
+        page = np.zeros((h, w), dtype=np.uint8)
+        page[y1 : y1 + h1, x1 : x1 + w1] = 1
+        page[y2 : y2 + h2, x2 : x2 + w2] = 1
+        nz = _hex_chain(dg, w, "n-").hex()
+        for j in range(2 * w):
+            if int(nz[j], 16) % 2:
+                page[h - 2 + j // w, j % w] = 1
+        flat = bytearray(page.reshape(-1).tolist())
+        fo = 1 if mid % 2 == 0 else 2
+        payload = encode_tiff_g4(
+            w, h, flat, rows_per_strip=rps, fillorder=fo,
+            compression=3, t4_2d=(mid % 2 == 0),
+        )
+        dw, dh, rgb = decode_tiff(payload)
+        a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+        decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
+        exact = int(np.array_equal(decoded_bits, page))
+        pm = probe_tiff(payload)
+        n_strips = (h + rps - 1) // rps
+        agrees = int(
+            pm["compression"] == 3
+            and pm["width"] == dw == w
+            and pm["height"] == dh == h
+            and pm["bits"] == 1
+            and pm["n_strips"] == n_strips
+        )
+        # strip bytes vs the packed 1-bit raster
+        # the G3 signature: every strip opens with (fill+)EOL
+        first_off = None
+        buf0 = payload
+        (ifd0,) = st.unpack_from("<I", buf0, 4)
+        (n0,) = st.unpack_from("<H", buf0, ifd0)
+        for i0 in range(n0):
+            e0 = ifd0 + 2 + 12 * i0
+            if st.unpack_from("<H", buf0, e0)[0] == 273:
+                (voff0,) = st.unpack_from("<I", buf0, e0 + 8)
+                (first_off,) = st.unpack_from("<I", buf0, voff0)
+                break
+        sb = payload[first_off : first_off + 2]
+        if fo == 2:
+            sb = bytes(
+                int(f"{b:08b}"[::-1], 2) for b in sb
             )
+        bits16 = (sb[0] << 8) | sb[1]
+        # first 12 bits must be 000000000001 (no leading fill
+        # in this encoder's output)
+        smaller = int(bits16 >> 4 == 1)
+        from reindexer_spark.tiff import TAG_T4_OPTIONS
 
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+        def with_t4opts(p2: bytes, val: int) -> bytes:
+            buf = bytearray(p2)
+            (ifd,) = st.unpack_from("<I", buf, 4)
+            (n2,) = st.unpack_from("<H", buf, ifd)
+            for i2 in range(n2):
+                e2 = ifd + 2 + 12 * i2
+                if st.unpack_from("<H", buf, e2)[0] == TAG_T4_OPTIONS:
+                    st.pack_into("<I", buf, e2 + 8, val)
+                    return bytes(buf)
+            raise MediaFormatError("fixture lacks T4Options")
+
+        try:
+            decode_tiff(with_t4opts(payload, 2))
+            g3q = 0
+        except MediaFormatError:
+            g3q = int(
+                probe_tiff(with_t4opts(payload, 2))["width"] == w
+            )
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "n_strips": n_strips,
+            "fillorder": "msb" if fo == 1 else "lsb",
+            "rgb_md5": hashlib.md5(
+                rgb.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": exact,
+            "eol_framed": smaller,
+            "probe_agrees": agrees,
+            "g3_quarantined": g3q,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, n_strips int, "
         "fillorder string, rgb_md5 string, roundtrip_exact int, "
         "eol_framed int, probe_agrees int, g3_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "image_tiff_planar",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
+    WITH {_base_sql(TIFF_DOCS)}, dims AS (
       SELECT media_id, dg,
-             15 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 24 AS w,
-             11 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 18 AS h,
+             15 + {_dg_byte(0)} % 24 AS w,
+             11 + {_dg_byte(1)} % 18 AS h,
              CASE WHEN media_id % 2 = 0 THEN 16 ELSE 8 END AS bits,
              CASE WHEN media_id % 3 <> 0 THEN 1 ELSE 0 END AS le,
-             4 + CAST(('0x' || substr(dg, 5, 2)) AS INT) % 6 AS rps
+             4 + {_dg_byte(2)} % 6 AS rps
       FROM base
     ), chain AS (
       SELECT media_id, w, h, bits, le, rps,
@@ -7697,9 +6858,10 @@ def image_tiff_g3(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INT) AS predictor,
            CAST(3 * ((h + rps - 1) // rps) AS INT) AS n_strips,
            md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS patched_interleaved_quarantined
+           {_flags_sql(
+               "roundtrip_exact", "probe_agrees",
+               "patched_interleaved_quarantined",
+           )}
     FROM px
     """,
 )
@@ -7723,15 +6885,9 @@ def image_tiff_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
     media lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
-        import struct as st
 
         import numpy as np
 
@@ -7743,121 +6899,86 @@ def image_tiff_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_tiff,
         )
 
-        def patch_planar(payload: bytes, val: int) -> bytes:
-            le = payload[:2] == b"II"
-            f = "<" if le else ">"
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from(f + "I", buf, 4)
-            (n,) = st.unpack_from(f + "H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from(f + "H", buf, e)[0] == TAG_PLANAR:
-                    st.pack_into(f + "H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a PlanarConfig tag")
+        dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+        w = 15 + int(dg[0:2], 16) % 24
+        h = 11 + int(dg[2:4], 16) % 18
+        bits = 16 if mid % 2 == 0 else 8
+        le = mid % 3 != 0
+        rps = 4 + int(dg[4:6], 16) % 6
+        comp, cname, pred = (
+            (1, "none", 1),
+            (5, "lzw", 2),
+            (32773, "packbits", 1),
+            (8, "deflate", 2),
+        )[mid % 4]
+        nbytes = w * h * 3 * (bits // 8)
+        src = _hex_chain(dg, nbytes)
+        if bits == 16:
+            dt = "<u2" if le else ">u2"
+            expected = (
+                np.frombuffer(src, dtype=dt).astype(np.uint16)
+                >> 8
+            ).astype(np.uint8).tobytes()
+        else:
+            expected = src
+        payload = encode_tiff(
+            w, h, src, le=le, bits=bits, compression=comp,
+            predictor=pred, planar=2, rows_per_strip=rps,
+        )
+        dw, dh, out = decode_tiff(payload)
+        pm = probe_tiff(payload)
+        n_strips = 3 * ((h + rps - 1) // rps)
+        agrees = int(
+            pm["kind"] == "tiff"
+            and pm["width"] == dw
+            and pm["height"] == dh
+            and pm["n_strips"] == n_strips
+        )
+        # an interleaved fixture patched to planar 2 refuses
+        inter = encode_tiff(
+            w, h, src, le=le, bits=bits, compression=comp,
+            predictor=pred, rows_per_strip=rps,
+        )
+        try:
+            decode_tiff(_patch_ifd_tag(inter, TAG_PLANAR, 2))
+            pq = 0
+        except MediaFormatError:
+            pq = 1
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "byte_order": "II" if le else "MM",
+            "bits": bits,
+            "compression": cname,
+            "predictor": pred,
+            "n_strips": n_strips,
+            "rgb_md5": hashlib.md5(
+                out.hex().encode()
+            ).hexdigest(),
+            "roundtrip_exact": int(out == expected),
+            "probe_agrees": agrees,
+            "patched_interleaved_quarantined": pq,
+        }
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 15 + int(dg[0:2], 16) % 24
-                h = 11 + int(dg[2:4], 16) % 18
-                bits = 16 if mid % 2 == 0 else 8
-                le = mid % 3 != 0
-                rps = 4 + int(dg[4:6], 16) % 6
-                comp, cname, pred = (
-                    (1, "none", 1),
-                    (5, "lzw", 2),
-                    (32773, "packbits", 1),
-                    (8, "deflate", 2),
-                )[mid % 4]
-                nbytes = w * h * 3 * (bits // 8)
-                src = bytes.fromhex(
-                    "".join(
-                        hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                        for i in range((nbytes + 31) // 32)
-                    )[: 2 * nbytes]
-                )
-                if bits == 16:
-                    dt = "<u2" if le else ">u2"
-                    expected = (
-                        np.frombuffer(src, dtype=dt).astype(np.uint16)
-                        >> 8
-                    ).astype(np.uint8).tobytes()
-                else:
-                    expected = src
-                payload = encode_tiff(
-                    w, h, src, le=le, bits=bits, compression=comp,
-                    predictor=pred, planar=2, rows_per_strip=rps,
-                )
-                dw, dh, out = decode_tiff(payload)
-                pm = probe_tiff(payload)
-                n_strips = 3 * ((h + rps - 1) // rps)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                    and pm["n_strips"] == n_strips
-                )
-                # an interleaved fixture patched to planar 2 refuses
-                inter = encode_tiff(
-                    w, h, src, le=le, bits=bits, compression=comp,
-                    predictor=pred, rows_per_strip=rps,
-                )
-                try:
-                    decode_tiff(patch_planar(inter, 2))
-                    pq = 0
-                except MediaFormatError:
-                    pq = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "byte_order": "II" if le else "MM",
-                        "bits": bits,
-                        "compression": cname,
-                        "predictor": pred,
-                        "n_strips": n_strips,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": int(out == expected),
-                        "probe_agrees": agrees,
-                        "patched_interleaved_quarantined": pq,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "byte_order",
-                    "bits", "compression", "predictor", "n_strips",
-                    "rgb_md5", "roundtrip_exact", "probe_agrees",
-                    "patched_interleaved_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
+    return _fixture_lane(
+        spark, sf_dir, TIFF_DOCS,
         "media_id bigint, width int, height int, byte_order string, "
         "bits int, compression string, predictor int, n_strips int, "
         "rgb_md5 string, roundtrip_exact int, probe_agrees int, "
         "patched_interleaved_quarantined int",
+        build_and_decode,
     )
 
 
 @query(
     "video_deepref",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {10}
-    ), s AS (
+    WITH {_base_sql(10)}, s AS (
       SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
+             {_dg_byte(0)} AS s0,
+             {_dg_byte(1)} AS s1,
+             {_dg_byte(2)} AS s2
       FROM base
     )
     SELECT media_id,
@@ -7866,10 +6987,10 @@ def image_tiff_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
       CAST(2 * (16 + s1 % 7) AS INT) AS height,
       CAST(12 AS INT) AS n_frames,
       CAST(24 + s2 % 8 AS INT) AS qp,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS over_cap_quarantined
+      {_flags_sql(
+          "decodable", "recon_exact", "containers_agree",
+          "over_cap_quarantined",
+      )}
     FROM s
     """,
 )
@@ -7888,13 +7009,8 @@ def video_deepref(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched mapInPandas over a bounded fixture
     set, payloads never shuffle — same as every video lane."""
-    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 10
-    )
-
-    def build_and_decode(batches):
+    def build_and_decode(mid, text):
         import hashlib
 
         import numpy as np
@@ -7908,124 +7024,111 @@ def video_deepref(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.h264 import encode_h264_ippp
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 9)
-                h = 2 * (16 + dg[1] % 7)
-                qp = 24 + dg[2] % 8
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(0, 256, (h, w, 3))
-                frames = [
-                    np.clip(
-                        base + rng.integers(-18, 19, (h, w, 3)), 0, 255
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                    for _ in range(12)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                _s, _p, _n, wrec = encode_h264_ippp(
-                    w, h, frames, qp=qp, n_refs=10, return_recon=True
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-deepref"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-deepref"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                recon_exact = int(out == wrec and len(out) == 12)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2)
-                except MediaFormatError:
-                    agree = 0
-                # 16 parses, 17 refuses — pinned on a synthetic header
-                from reindexer_spark.h264 import (
-                    _BitReader,
-                    _parse_slice_header,
-                    _parse_sps_slice_fields,
-                    parse_pps,
-                    write_h264_sps,
-                    write_pps,
-                )
-                from reindexer_spark.h264 import _BitWriter as _BW
+        dg = hashlib.sha256(text.encode("utf-8")).digest()
+        w = 2 * (16 + dg[0] % 9)
+        h = 2 * (16 + dg[1] % 7)
+        qp = 24 + dg[2] % 8
+        rng = np.random.default_rng(
+            int.from_bytes(dg[:8], "big")
+        )
+        base = rng.integers(0, 256, (h, w, 3))
+        frames = [
+            np.clip(
+                base + rng.integers(-18, 19, (h, w, 3)), 0, 255
+            )
+            .astype(np.uint8)
+            .tobytes()
+            for _ in range(12)
+        ]
+        container = "mp4" if mid % 2 == 0 else "mkv"
+        _s, _p, _n, wrec = encode_h264_ippp(
+            w, h, frames, qp=qp, n_refs=10, return_recon=True
+        )
+        mp4 = encode_mp4_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp-deepref"
+        )
+        mkv = encode_mkv_coded(
+            w, h, intra_frames=frames, qp=qp, gop="ippp-deepref"
+        )
+        payload = mp4 if container == "mp4" else mkv
+        dec = decode_mp4 if container == "mp4" else decode_mkv
+        try:
+            dw, dh, _durs, out, _sync = dec(payload)
+            decodable = 1
+        except MediaFormatError:
+            dw = dh = 0
+            out = []
+            decodable = 0
+        recon_exact = int(out == wrec and len(out) == 12)
+        other = decode_mkv if container == "mp4" else decode_mp4
+        try:
+            _w2, _h2, _d2, out2, _s2 = other(
+                mkv if container == "mp4" else mp4
+            )
+            agree = int(out == out2)
+        except MediaFormatError:
+            agree = 0
+        # 16 parses, 17 refuses — pinned on a synthetic header
+        from reindexer_spark.h264 import (
+            _BitReader,
+            _parse_slice_header,
+            _parse_sps_slice_fields,
+            parse_pps,
+            write_h264_sps,
+            write_pps,
+        )
+        from reindexer_spark.h264 import _BitWriter as _BW
 
-                spsd = _parse_sps_slice_fields(
-                    write_h264_sps(w, h, 66, 30, num_ref_frames=16)
-                )
-                ppsd = parse_pps(write_pps(26))
+        spsd = _parse_sps_slice_fields(
+            write_h264_sps(w, h, 66, 30, num_ref_frames=16)
+        )
+        ppsd = parse_pps(write_pps(26))
 
-                def p_hdr(nact: int) -> None:
-                    bw = _BW()
-                    bw.ue(0)  # first_mb
-                    bw.ue(0)  # slice_type P
-                    bw.ue(0)  # pps_id
-                    bw.u(0, 4)  # frame_num
-                    bw.u(0, 4)  # poc_lsb
-                    bw.u(1, 1)  # override
-                    bw.ue(nact - 1)
-                    bw.u(0, 1)  # no rplm
-                    bw.se(0)  # slice_qp_delta
-                    bw.ue(1)  # deblock idc 1: filter off, no offsets
-                    bw.u(0, 8)  # pad
-                    _parse_slice_header(
-                        _BitReader(bw.finish()), spsd, ppsd,
-                        idr=False, nal_ref_idc=0,
-                    )
-
-                try:
-                    p_hdr(16)
-                    ok16 = 1
-                except MediaFormatError:
-                    ok16 = 0
-                try:
-                    p_hdr(17)
-                    over_q = 0
-                except MediaFormatError:
-                    over_q = ok16
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "decodable": decodable,
-                        "recon_exact": recon_exact,
-                        "containers_agree": agree,
-                        "over_cap_quarantined": over_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "decodable", "recon_exact",
-                    "containers_agree", "over_cap_quarantined",
-                ],
+        def p_hdr(nact: int) -> None:
+            bw = _BW()
+            bw.ue(0)  # first_mb
+            bw.ue(0)  # slice_type P
+            bw.ue(0)  # pps_id
+            bw.u(0, 4)  # frame_num
+            bw.u(0, 4)  # poc_lsb
+            bw.u(1, 1)  # override
+            bw.ue(nact - 1)
+            bw.u(0, 1)  # no rplm
+            bw.se(0)  # slice_qp_delta
+            bw.ue(1)  # deblock idc 1: filter off, no offsets
+            bw.u(0, 8)  # pad
+            _parse_slice_header(
+                _BitReader(bw.finish()), spsd, ppsd,
+                idr=False, nal_ref_idc=0,
             )
 
-    return docs.select("doc_id", "text").repartition(10).mapInPandas(
-        build_and_decode,
+        try:
+            p_hdr(16)
+            ok16 = 1
+        except MediaFormatError:
+            ok16 = 0
+        try:
+            p_hdr(17)
+            over_q = 0
+        except MediaFormatError:
+            over_q = ok16
+        return {
+            "media_id": mid,
+            "container": container,
+            "width": dw,
+            "height": dh,
+            "n_frames": len(out),
+            "qp": qp,
+            "decodable": decodable,
+            "recon_exact": recon_exact,
+            "containers_agree": agree,
+            "over_cap_quarantined": over_q,
+        }
+
+    return _fixture_lane(
+        spark, sf_dir, 10,
         "media_id bigint, container string, width int, height int, "
         "n_frames int, qp int, decodable int, recon_exact int, "
         "containers_agree int, over_cap_quarantined int",
+        build_and_decode,
     )

@@ -25,6 +25,7 @@ Used by tests/test_oracle_parity.py and runnable directly:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import pandas as pd
@@ -33,16 +34,18 @@ from reindexer_spark.catalog import TABLES
 
 
 def run_oracle_duckdb(sql: str, sf_dir: str) -> pd.DataFrame:
-    """Run oracle SQL on DuckDB with catalog tables registered as views;
-    returns the result as a pandas DataFrame (the driver's path)."""
+    """Run oracle SQL on DuckDB with the catalog tables present under
+    ``sf_dir`` registered as views (a table the SQL reads but the
+    directory lacks fails in DuckDB as an unknown table); returns the
+    result as a pandas DataFrame, the external gate's path."""
     import duckdb
 
     con = duckdb.connect()
     try:
         for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
+            path = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
         return con.sql(sql).df()
     finally:
         con.close()

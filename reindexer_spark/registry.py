@@ -51,9 +51,11 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             from reindexer_spark.cache import release_all
+            from reindexer_spark.streaming.runner import forget_source_bytes
 
             tune(spark)  # UTC/AQE/Arrow regardless of who built the session
             release_all()  # previous query's internal persists end here
+            forget_source_bytes(spark)  # ... and its unrun stream sources
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -37,38 +37,13 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _scan_confs() -> dict[str, str]:
-    """Optional scan-split overrides for cluster profiles (opt-in only).
-
-    Measured r16 (guide §1: keep only what you can measure): forcing
-    finer splits locally (openCostInBytes 512 KB + an explicit
-    minPartitionNum) showed NO stable q1 gain in an interleaved
-    same-session A/B — Spark's default split formula already divides
-    by defaultParallelism, and the residual wall is driver/scheduling
-    floor, not scan width — while adding variance on the Python-heavy
-    media lanes.  So the defaults ship UNSET (stock Spark behavior);
-    the env knobs remain for cluster profiles where a measured case
-    exists (e.g. very large sequential scans wanting 512 MB-1 GB
-    splits per guide §6)."""
-    out = {}
-    if "SPARK_GRAFT_SCAN_MIN_PARTITIONS" in os.environ:
-        out["spark.sql.files.minPartitionNum"] = os.environ[
-            "SPARK_GRAFT_SCAN_MIN_PARTITIONS"
-        ]
-    if "SPARK_GRAFT_SCAN_OPEN_COST" in os.environ:
-        out["spark.sql.files.openCostInBytes"] = os.environ[
-            "SPARK_GRAFT_SCAN_OPEN_COST"
-        ]
-    return out
-
-
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
 
     Every registered query calls this, so correctness does not depend on
     who built the SparkSession.
     """
-    for k, v in {**RUNTIME_CONFS, **_scan_confs()}.items():
+    for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -103,7 +78,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
-    for k, v in {**RUNTIME_CONFS, **_scan_confs()}.items():
+    for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -79,22 +79,24 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 #     partitions = clamp(ceil(source_bytes / STATE_STORE_TARGET_BYTES),
 #                        STATE_PARTITIONS_MIN, STATE_PARTITIONS_MAX)
 #
-# STATE_STORE_TARGET_BYTES defaults to 1 GiB — the middle of the
-# 0.5-2 GB/store band HDFS-backed and RocksDB state stores are sized to
-# in production; override via SPARK_GRAFT_STATE_STORE_TARGET_BYTES.  At
-# the local test scales (sources of a few MB) the clamp floor keeps the
-# r16-measured value of 8, so the driver's bench is unchanged; a 100 TB
-# ingest derives ~2048 (the cap — past that, coordination overhead and
-# tiny files dominate; raise SPARK_GRAFT_STREAM_STATE_PARTITIONS
-# explicitly if a deployment really holds >2 TB of live state).
+# STATE_STORE_TARGET_BYTES is 1 GiB — the middle of the 0.5-2 GB/store
+# band HDFS-backed and RocksDB state stores are sized to in production.
+# At the local test scales (sources of a few MB) the clamp floor keeps
+# the r16-measured value of 8, so bench numbers are unchanged; a
+# 100 TB ingest derives ~2048 (the cap — past that, coordination
+# overhead and tiny files dominate; pass state_partitions= explicitly
+# if a deployment really holds >2 TB of live state).
 #
 # The sizing hint comes from the source constructors below, which
 # register their input bytes per application; run_stream_to_memory
-# consumes (and clears) the registration.  Like the shuffle-partition
-# override itself this assumes the harness starts streams serially —
-# the documented contract of this runner (bench/verify are serial); a
-# concurrent-streams deployment must pass state_partitions explicitly.
-# A non-local master with NO sizing information (explicit arg, env, or
+# consumes (and clears) the registration, and every registered query
+# starts from an empty one (registry.query), so a source built but
+# never run cannot size the next query's stream.  Like the
+# shuffle-partition override itself this assumes the harness starts
+# streams serially — the documented contract of this runner
+# (bench/verify are serial); a concurrent-streams deployment must pass
+# state_partitions explicitly.
+# A non-local master with NO sizing information (explicit arg or
 # registered source bytes) fails loudly instead of silently running
 # 8 stores against cluster-scale state.
 
@@ -107,16 +109,9 @@ _PENDING_SOURCE_BYTES: dict[str, int] = {}
 
 def state_partitions_for(source_bytes: int | None) -> int:
     """The state-partition sizing rule (see module comment above)."""
-    import os
-
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_STATE_STORE_TARGET_BYTES", STATE_STORE_TARGET_BYTES
-        )
-    )
     if not source_bytes or source_bytes <= 0:
         return STATE_PARTITIONS_MIN
-    n = -(-source_bytes // target)
+    n = -(-source_bytes // STATE_STORE_TARGET_BYTES)
     return max(STATE_PARTITIONS_MIN, min(STATE_PARTITIONS_MAX, n))
 
 
@@ -138,6 +133,13 @@ def _register_source_bytes(spark, path: str) -> None:
         return
     key = spark.sparkContext.applicationId
     _PENDING_SOURCE_BYTES[key] = _PENDING_SOURCE_BYTES.get(key, 0) + n
+
+
+def forget_source_bytes(spark) -> None:
+    """Drop this application's pending registration: a source built but
+    never run must not size the next stream (called as each registered
+    query starts)."""
+    _PENDING_SOURCE_BYTES.pop(spark.sparkContext.applicationId, None)
 
 
 def _stream_table_source(spark, sf_dir: str, name: str, schema: str,
@@ -208,14 +210,13 @@ def run_stream_to_memory(
     via state_partitions_for (see the policy comment above) — r16's
     constant 8 became the clamp floor, which the local test scales
     resolve to, so bench numbers are directly comparable.  Precedence:
-    explicit ``state_partitions`` arg > SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    env > derived-from-source-bytes.  A non-local master with none of
-    the three raises rather than running cluster-scale state on the
-    floor value.  Results are partitioning-independent (same state
-    keys, same outputs — every live lane stays oracle-gated); a
-    restarted checkpoint keeps the partition count it was created with
-    (Spark pins it in the offset metadata), so this only shapes NEW
-    streams.
+    explicit ``state_partitions`` arg > derived-from-source-bytes.  A
+    non-local master with neither raises rather than running
+    cluster-scale state on the floor value.  Results are
+    partitioning-independent (same state keys, same outputs — every
+    live lane stays oracle-gated); a restarted checkpoint keeps the
+    partition count it was created with (Spark pins it in the offset
+    metadata), so this only shapes NEW streams.
 
     ``state_partitions`` overrides the default for lanes whose
     micro-batch cost is PYTHON COMPUTE rather than store bookkeeping
@@ -224,8 +225,6 @@ def run_stream_to_memory(
     parallelism — the stream_cdc_dedup_live lane measured 22 s at 8
     partitions vs 14 s at 32 while the store-bound joins moved the
     opposite way."""
-    import os
-
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     spark = streaming_df.sparkSession
     src_bytes = _PENDING_SOURCE_BYTES.pop(
@@ -233,17 +232,15 @@ def run_stream_to_memory(
     )
     if state_partitions is not None:
         parts = str(state_partitions)
-    elif os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
-        parts = os.environ["SPARK_GRAFT_STREAM_STATE_PARTITIONS"]
     else:
         master = spark.sparkContext.master
         if src_bytes is None and not master.startswith("local"):
             raise RuntimeError(
                 "run_stream_to_memory: no state-partition sizing on a "
-                f"non-local master ({master}). Pass state_partitions=, "
-                "set SPARK_GRAFT_STREAM_STATE_PARTITIONS, or read the "
-                "stream through a size-registering source; the sizing "
-                "rule is ceil(state_bytes / 1 GiB) clamped to [8, 2048]."
+                f"non-local master ({master}). Pass state_partitions= "
+                "or read the stream through a size-registering source; "
+                "the sizing rule is ceil(state_bytes / 1 GiB) clamped to "
+                "[8, 2048]."
             )
         parts = str(state_partitions_for(src_bytes))
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -47,3 +47,21 @@ def test_contract_shapes(spark):
         "multimodal_probe_meta",
         "crawl_media_harvest",
     }
+
+
+def test_oracle_runs_on_a_documents_only_directory(tmp_path, sf_dir):
+    """Only the catalog tables present are registered: a directory with
+    just documents.parquet runs a documents-only oracle, and SQL over a
+    missing table still fails loudly in DuckDB."""
+    import shutil
+
+    import duckdb
+
+    from reindexer_spark.oracle import run_oracle_duckdb
+
+    shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
+    got = run_oracle_duckdb("SELECT COUNT(*) AS n FROM documents", str(tmp_path))
+    want = run_oracle_duckdb("SELECT COUNT(*) AS n FROM documents", sf_dir)
+    assert got["n"].tolist() == want["n"].tolist() and want["n"][0] > 0
+    with pytest.raises(duckdb.CatalogException):
+        run_oracle_duckdb("SELECT COUNT(*) AS n FROM events", str(tmp_path))

@@ -833,22 +833,18 @@ def test_stateful_cdc_dedup_carries_fingerprints_across_batches(
 # ---------------------------------------------------------------------------
 
 
-def test_state_partition_policy_values(monkeypatch):
+def test_state_partition_policy_values():
     """state_partitions_for sizes stores from source volume: floor 8 at
     test scale (keeps r16's measured local value — bench comparable),
-    ceil(bytes/1 GiB) in the middle, capped at 2048; the per-store
-    target is env-overridable."""
+    ceil(bytes/1 GiB) in the middle, capped at 2048."""
     from reindexer_spark.streaming import runner
 
-    monkeypatch.delenv("SPARK_GRAFT_STATE_STORE_TARGET_BYTES", raising=False)
     assert runner.state_partitions_for(None) == 8
     assert runner.state_partitions_for(0) == 8
     assert runner.state_partitions_for(10 << 20) == 8  # local test scale
     assert runner.state_partitions_for(100 << 30) == 100  # 100 GiB ingest
     assert runner.state_partitions_for((100 << 30) + 1) == 101  # ceil
     assert runner.state_partitions_for(100 * 10**12) == 2048  # 100 TB: cap
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE_TARGET_BYTES", str(1 << 20))
-    assert runner.state_partitions_for(64 << 20) == 64
 
 
 def test_stream_sources_register_bytes_and_runner_consumes(spark, sf_dir):
@@ -875,8 +871,22 @@ def test_stream_sources_register_bytes_and_runner_consumes(spark, sf_dir):
     assert key not in runner._PENDING_SOURCE_BYTES
 
 
-def test_runner_raises_on_nonlocal_master_without_sizing(monkeypatch):
-    """A non-local master with no explicit/env/registered sizing must
+def test_registry_query_clears_unrun_source_bytes(spark, sf_dir):
+    """A stream source built but never run must not size the next
+    query's stream: every registered query starts with nothing pending
+    for its application."""
+    from reindexer_spark.registry import get_query
+    from reindexer_spark.streaming import runner
+
+    key = spark.sparkContext.applicationId
+    stream_events(spark, sf_dir)  # built, never run
+    assert runner._PENDING_SOURCE_BYTES.get(key)
+    get_query("q1_pricing_summary").fn(spark, sf_dir)
+    assert key not in runner._PENDING_SOURCE_BYTES
+
+
+def test_runner_raises_on_nonlocal_master_without_sizing():
+    """A non-local master with no explicit/registered sizing must
     fail loudly instead of running cluster-scale state on the floor."""
     from reindexer_spark.streaming import runner
 
@@ -890,6 +900,5 @@ def test_runner_raises_on_nonlocal_master_without_sizing(monkeypatch):
     class _DF:
         sparkSession = _Session()
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
     with pytest.raises(RuntimeError, match="non-local master"):
         runner.run_stream_to_memory(_DF())
